@@ -1,37 +1,40 @@
 #!/usr/bin/env python
-"""Benchmark harness: run every declared query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line:
+"""Declared-query sweep: run every declared query and the extra rows at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 test data) and print ONE JSON
+line:
 
-    {"metric": "...", "value": <total sec>, "unit": "sec",
-     "queries": {"<name>": sec, ...}, "sf": <sf>}
+    {"metric": "...", "unit": "sec", "sf": <sf>,
+     "queries": {"<name>": sec, ...}, "extra_queries": {...},
+     "value": <sum of the declared rows>}
 
-Each query is materialized through the noop sink (full plan execution,
-no driver collect, no disk write) - the honest "how fast does the plan
-run" number.  A warmup query amortizes JVM/codegen startup so per-query
-numbers reflect steady state.
+Each row runs once through the noop sink (full plan execution, no
+driver collect, no disk write) inside its own Spark job group.  The run
+keeps Spark's event log in a temporary directory and at the end writes
+one record per row to ``bench_metrics.json``: wall, jobs, tasks, failed
+tasks, task CPU, GC, shuffle and spill.  Jobs and tasks do not move
+with host load and task CPU moves far less than wall, so a slow wall
+with unchanged counts reads as a busy host, and changed counts read as
+a changed plan.
 
-The artifact is self-defending against host noise (round-5): rows
-reading > 2x their anchor re-measure best-of-3 in a fresh JVM, both
-readings are recorded (`isolated_retries`), and `value` is the gated
-total with isolated values substituted (`raw_total` keeps the
-uncorrected sum).  `bench.py --isolated a,b,c` is the retry entry
-point (also usable by hand).
+``python3 perfbench/run.py`` is the benchmark of record; this is the
+full 50-row sweep.
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import subprocess
+import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-from kafka_cassandra_plugin_spark.queries import load_all
-from kafka_cassandra_plugin_spark.session import get_spark
+from kafka_cassandra_plugin_spark.queries import load_all  # noqa: E402
+from kafka_cassandra_plugin_spark.session import get_spark  # noqa: E402
+from perfbench.trace import TaskTotals, group_jobs, parse_event_log  # noqa: E402
 
 
 def materialize(df) -> None:
@@ -53,273 +56,55 @@ def release_session_state() -> None:
     gc.collect()
 
 
-# --------------------------------------------------------------------------
-# Self-defending measurement: anchors + automatic isolated retries.
-#
-# Three rounds running, the recurring source of judge/builder ambiguity has
-# been full-run readings inflated by run-order neighborhood or co-tenant
-# host load, with the isolated steady-state number asserted in prose but
-# not recorded in the artifact.  This closes that loop mechanically: any
-# row reading > 2x its anchor is re-measured best-of-3 in a FRESH JVM
-# after the main pass, and BOTH readings land in the JSON
-# (`queries`/`extra_queries` keep the raw full-run numbers;
-# `isolated_retries` records {raw, isolated, anchor} per flagged row).
-# The gated `value` is computed with isolated values substituted for
-# flagged rows; `raw_total` keeps the uncorrected sum alongside.
-# --------------------------------------------------------------------------
-
-# Isolated steady-state anchors from BASELINE.md (re-anchored values where
-# a round re-anchored with cause).  Rows not listed here anchor on the
-# minimum recorded reading across all prior BENCH_r*.json artifacts - the
-# best observed full-run value is a conservative proxy for steady state.
-EXPLICIT_ANCHORS = {
-    "agg_pricing_summary": 1.30,
-    "join_star_revenue": 1.43,
-    "term_frequency_topk": 0.34,
-    "dedup_exact": 0.80,
-    "dedup_minhash_lsh": 3.29,
-    # round-10 re-anchor with cause (BASELINE.md): hash-shingle plan
-    # (map-only array substrate, long join keys) measured 5.93 isolated
-    # on a calib_s-0.27 host = ~4.8 on the anchor host class; the old
-    # 4.17 belonged to the string-key plan.
-    "dedup_ngram_jaccard": 4.8,
-    # round-15 re-anchor with cause (round-14 verdict #6): the declared
-    # row's geometry is now corpus-adaptive (act=11 bits at sf0.1 vs the
-    # old fixed 6), trading ~0.7 s of probe-fanout cost at the gated
-    # scale for near-linear growth at sf10 (the fixed geometry measured
-    # 16.09x per 10x); isolated best-of-5 3.506 on a calib-0.21 host.
-    # (History: round-10 anchor 2.8 for the fixed 4x6 form.)
-    "sim_lsh_ann_portable": 3.5,
-    # round-10 re-anchor with cause (BASELINE.md): the exact-verify
-    # kernel moved from the interpreted HOF fold (single-threaded after
-    # AQE coalesces the candidate join) to the bit-identical Arrow fold
-    # - isolated 4.20 -> 3.29 on this calib-0.24 host.
-    "dedup_embedding_cosine": 2.6,
-    "sim_topk_bruteforce": 1.22,
-    "sim_lsh_ann": 2.65,
-    # round-13 plan change with cause (BASELINE.md): the declared slot
-    # moved to ivf_topk_portable (sample quantizer, hash-matched vs
-    # DuckDB), then same-round to its Arrow-batched fold-exact form
-    # with the vec_id<2000 growth cap (identity at sf0.1; isolated
-    # steady best 2.7 on a calib-0.252 host).  The learned-KMeans path
-    # keeps the old 1.8 anchor under its new extras name.
-    "sim_ivf_ann": 2.2,
-    "sim_ivf_ann_kmeans": 1.8,
-    # round-14 re-anchor with cause: the row changed identity when it
-    # was promoted to hash-matched (1 output column -> f0/f7/f8/f15 +
-    # fold-ordered mean over all 16 features; the mapInPandas decode
-    # itself is unchanged).  Isolated best-of-5 on a calib-0.50 host:
-    # 1.56; the 0.59 artifact minimum predates the promotion and must
-    # not anchor the 5-column row.
-    "media_decode_features": 1.3,
-    "text_stats": 1.64,
-    "cdc_value_changes": 1.02,
-    "leader_timeline_replay": 0.97,
-    "join_range_bands": 0.95,
-    "csv_roundtrip": 0.75,
-    # round-6 anchors for the round-5 ops (isolated best-of-3, quiet
-    # host; BASELINE.md "Round-6 anchors" note); lm_perplexity
-    # re-anchored 0.40 -> 1.02 with cause in BASELINE.md.
-    # dedup_semantic: round-10 re-anchor with cause: the Arrow-fold
-    # verify swap; the in-cell verify WAS this operator's dominant term
-    # - isolated 8.10 -> 1.45 (probe-only path, index memoized).
-    "dedup_semantic": 1.2,
-    "bloom_filter_new": 0.46,
-    "lm_perplexity": 1.02,
-    # round-9 re-anchor with cause (BASELINE.md): the round-5 openCost
-    # trade moved this row's steady state to ~1.5-1.7 s (isolated
-    # best-of-3: 1.54 r5, 1.70 r7/r8, 1.74 r9); the 0.72 artifact
-    # minimum predates that trade, and anchoring on it kept drifting
-    # the one deliberately-slow-path row toward the 2x gate.
-    "udf_scalar": 1.7,
-    # round-9 D26 row, steady state on a quiet host AFTER the
-    # fingerprint_overlap persist fix (the 8.38 first-run artifact
-    # reading predates the fix and must not anchor).
-    "fingerprint_winnow": 5.2,
-    # round-12 governed BM25 serving row (verdict #4): isolated
-    # best-of-3 1.125 on this calib-0.216 VM = ~0.9 on the anchor host
-    # class (BASELINE.md round-12 note).
-    "bm25_topk[maxdf]": 0.9,
-}
-
-# Don't flag sub-half-second excursions: a 0.2 s row reading 0.45 s is
-# noise in absolute terms and a fresh-JVM retry costs more than it settles.
-ISOLATION_FLOOR_S = 0.5
+def session(app: str, **overrides: str):
+    """The harness session: ``local[N]`` with N from $SPARK_GRAFT_CPUS,
+    else the host's CPU count, and 2N shuffle partitions.  ``overrides``
+    are Spark confs and win over both."""
+    n = int(os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+            or os.cpu_count())
+    conf = {"spark.sql.shuffle.partitions": str(2 * n), **overrides}
+    return get_spark(app, master=f"local[{n}]", overrides=conf)
 
 
-def _tail_regions(tail: str) -> list[str]:
-    """Anchor-safe slices of a truncated artifact tail.
-
-    The recorded tail is the LAST 2000 chars of the bench line; for
-    recent rounds that window starts inside the sf10-campaign payload,
-    so a whole-tail name:number regex absorbs GROWTH RATIOS (and sf1/
-    sf10 seconds) as per-query sf0.1 anchors - round-14 verdict #1:
-    dedup_simhash "anchored" at its r13 growth ratio 1.28 and fired a
-    spurious fresh-JVM retry.  Only two tail regions hold genuine sf0.1
-    readings keyed by query name:
-
-    * the ``"queries"`` / ``"extra_queries"`` objects (short artifacts
-      where the main table survived truncation), and
-    * the ``"isolated_retries"`` object, whose ``"isolated"`` values
-      are fresh-JVM best-of-5 sf0.1 seconds - ideal anchor material -
-      re-keyed here to the row name so the flat regex can absorb them.
-
-    Everything else (``sf1_extra``/``sf10``/``growth``/``sf1_oracle``)
-    is a different scale or a dimensionless ratio and is dropped.
-    """
-    import re
-
-    regions: list[str] = []
-    for key in ("queries", "extra_queries"):
-        # tolerate a region cut off by the 2000-char truncation at
-        # either end: stop at the closing brace or the tail's end
-        m = re.search(r'"%s":\s*\{([^{}]*)(?:\}|$)' % key, tail)
-        if m:
-            regions.append(m.group(1))
-    for name, iso in re.findall(
-        r'"([A-Za-z0-9_\[\]]+)":\s*\{[^{}]*"isolated":\s*([0-9]+\.[0-9]+)',
-        tail,
-    ):
-        regions.append('"%s": %s' % (name, iso))
-    return regions
-
-
-def load_anchors(repo_dir: str) -> dict[str, float]:
-    """Per-row anchors: EXPLICIT_ANCHORS (BASELINE.md isolated steady
-    states) min-merged with every sf0.1 reading recoverable from prior
-    BENCH_r*.json artifacts.  The driver wraps our stdout - `parsed` is
-    the JSON payload when it fit the recorded tail, else `tail` holds
-    the line's last 2000 chars; a truncated tail is mined ONLY in its
-    anchor-safe regions (see _tail_regions) so campaign growth ratios
-    and sf1/sf10 seconds can never masquerade as sf0.1 anchors."""
-    import re
-
-    meta_keys = {"value", "raw_total", "sf", "n", "rc", "cpus",
-                 "raw", "isolated", "anchor"}
-    anchors = dict(EXPLICIT_ANCHORS)
-
-    def absorb(name: str, t) -> None:
-        # explicit anchors are AUTHORITATIVE: they exist precisely to
-        # re-anchor rows whose artifact minimum predates a with-cause
-        # plan/config change (lm_perplexity 0.40->1.02, udf_scalar
-        # 0.72->1.7) - min-merging would silently undo the re-anchor
-        if name in EXPLICIT_ANCHORS:
-            return
-        if isinstance(t, (int, float)) and name not in meta_keys:
-            anchors[name] = min(anchors.get(name, float("inf")), float(t))
-
-    # bench_out.json is the committed FULL payload of the last builder
-    # run - the only place recent rounds' extras readings survive (the
-    # driver tail truncates them away), so extras rows keep an anchor
-    paths = sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json")))
-    paths += glob.glob(os.path.join(repo_dir, "bench_out.json"))
-    for p in paths:
-        try:
-            with open(p) as f:
-                data = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if isinstance(data.get("parsed"), dict):
-            src = data["parsed"]
-        elif isinstance(data.get("queries"), dict):
-            src = data
-        else:
-            src = None
-        if src is not None:
-            for sec in (src.get("queries") or {}, src.get("extra_queries") or {}):
-                for name, t in sec.items():
-                    absorb(name, t)
-            continue
-        for region in _tail_regions(data.get("tail", "")):
-            for name, t in re.findall(
-                r'"([A-Za-z0-9_\[\]]+)":\s*([0-9]+\.[0-9]+)', region
-            ):
-                absorb(name, float(t))
-    return anchors
-
-
-def _best_of(run, k: int = 3) -> float:
-    best = float("inf")
-    for _ in range(k):
-        t0 = time.perf_counter()
-        run()
-        best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
-def _isolated_main(names: list[str]) -> None:
-    """`bench.py --isolated a,b,c`: measure ONLY the named rows, best-of-5
-    each, in this fresh JVM; print one JSON dict.  Same session confs and
-    warmup as the main pass, so the only variable removed is run-order
-    neighborhood (and, on a loaded host, a second chance at a quiet
-    window).  Best-of-FIVE, not three (round-13 finding): interpreted-HOF
-    rows (F.transform/F.aggregate - lang_breakdown,
-    leader_timeline_replay) reach JIT steady state on run 4-5, so a
-    best-of-3 retry under-warms exactly the rows most likely to be
-    flagged."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "32"
-    registry = load_all()
-    spark = get_spark(
-        "kcp-bench-isolated",
-        master=f"local[{cpus}]",
-        overrides={"spark.sql.shuffle.partitions": str(2 * int(cpus))},
-    )
-    registry["agg_pricing_summary"].build(spark, sf_dir).count()
-    extra_fns = {**_xxhash64_variants(sf_dir), **_depth_ops(sf_dir)}
-    out: dict[str, float] = {}
-    for name in names:
-        if name in registry:
-            out[name] = _best_of(
-                lambda: materialize(registry[name].build(spark, sf_dir)), k=5
-            )
-        elif name in extra_fns:
-            out[name] = _best_of(
-                lambda: materialize(extra_fns[name](spark)), k=5)
-    print(json.dumps(out))
-    spark.stop()
-
-
-def _run_isolated_retries(flagged: list[str]) -> dict[str, float]:
-    """Re-measure flagged rows in a fresh JVM subprocess; {} on failure
-    (the raw numbers then stand, and the artifact says why)."""
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--isolated",
-             ",".join(flagged)],
-            capture_output=True, text=True, timeout=1500,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-        )
-        for line in reversed(proc.stdout.strip().splitlines()):
-            line = line.strip()
-            if line.startswith("{"):
-                return {k: float(v) for k, v in json.loads(line).items()}
-    except (subprocess.TimeoutExpired, OSError, ValueError):
-        pass
-    return {}
-
-
-def _steady_state(run, threshold: float = 2.0, max_runs: int = 3) -> float:
-    """Best-of-up-to-``max_runs`` wall time.  First runs of heavy queries
-    pay their predecessors' cleanup (GC debt, codegen cache churn, Python
-    worker spin-up), so a single reading over ``threshold`` seconds is
-    retried until it stops improving by >10% or the run budget is spent -
-    the recorded number is the steady-state cost of the query itself."""
+def measure_row(spark, name: str, run) -> dict:
+    """Run one row under Spark job group ``name`` and return its wall
+    seconds with the group's jobs, tasks and failed tasks (status
+    tracker, read right after the row).  A group's counts add up over
+    calls, so give every measured run its own name."""
+    sc = spark.sparkContext
     release_session_state()
+    sc.setJobGroup(name, name)
     t0 = time.perf_counter()
-    run()
-    best = time.perf_counter() - t0
-    runs = 1
-    while best > threshold and runs < max_runs:
-        t0 = time.perf_counter()
+    try:
         run()
-        t = time.perf_counter() - t0
-        runs += 1
-        improved = t < best * 0.9
-        best = min(best, t)
-        if not improved:
-            break
-    return round(best, 3)
+    finally:
+        wall = time.perf_counter() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs, tasks, failed = group_jobs(sc, name)
+    return {"wall_s": round(wall, 3), "jobs": jobs, "tasks": tasks,
+            "failed_tasks": failed}
+
+
+def write_row_metrics(path: str, rows: dict[str, dict], log_dir: str,
+                      app_id: str) -> None:
+    """Complete each ``measure_row`` record (keyed by its job group) with
+    the task CPU, GC, shuffle and spill of the group's jobs in the
+    application's event log, and write them to ``path`` as JSON."""
+    totals = {name: TaskTotals() for name in rows}
+    for _, group, _, t in parse_event_log(log_dir, app_id):
+        if group in totals:
+            totals[group].add(t)
+    out = {
+        name: {**rec,
+               "task_cpu_s": round(totals[name].cpu_s, 3),
+               "gc_s": round(totals[name].gc_s, 3),
+               "shuffle_mb": round(totals[name].shuffle_mb, 3),
+               "spill_mb": round(totals[name].spill_mb, 3)}
+        for name, rec in rows.items()
+    }
+    with open(path, "w") as f:
+        json.dump(out, f, indent=1)
 
 
 def _load_sf10_campaign(repo_dir: str) -> dict | None:
@@ -397,140 +182,65 @@ def _load_sf10_campaign(repo_dir: str) -> dict | None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "32"
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     registry = load_all()
-    # mine sf1 retry priors NOW: the first checkpoint_artifact() below
-    # overwrites bench_out.json, the only artifact carrying the prior
-    # round's full sf1_queries section (see _load_sf1_priors)
-    sf1_priors = _load_sf1_priors(os.path.dirname(os.path.abspath(__file__)))
-
-    spark = get_spark(
-        "kcp-bench",
-        master=f"local[{cpus}]",
-        overrides={"spark.sql.shuffle.partitions": str(2 * int(cpus))},
-    )
+    events = tempfile.mkdtemp(prefix="kcp-bench-events-")
+    spark = session("kcp-bench", **{
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": "file://" + events,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    })
 
     # warmup: touch every table + run the flagship once (JVM JIT, codegen,
     # parquet footer cache)
     registry["agg_pricing_summary"].build(spark, sf_dir).count()
 
-    # host calibration: a FIXED data-independent workload (hash+agg over
-    # spark.range - no I/O, no parquet, same plan every round), recorded
-    # so cross-round/cross-host comparisons are normalizable.  Rounds run
-    # on freshly provisioned VMs whose CPU/IO class varies; a round where
-    # every small row reads ~1.5-2x its anchor but calib_s moved the same
-    # way is a slower host, not a regression (round-9 finding: anchors
-    # recorded on a faster host than the round-9 VM).
-    def _calib() -> float:
-        # bit_xor, not sum: overflow-free under ANSI mode
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, int(cpus)).selectExpr(
-            "bit_xor(xxhash64(id)) AS s", "count(1) AS n"
-        ).collect()
-        return time.perf_counter() - t0
+    rows: dict[str, dict] = {}  # job group -> measure_row record
 
-    calib_s = round(min(_calib(), _calib()), 3)
+    def measure(group: str, run) -> float:
+        rows[group] = measure_row(spark, group, run)
+        return rows[group]["wall_s"]
 
-    times: dict[str, float] = {}
-    for name in sorted(registry):
-        times[name] = _steady_state(lambda: materialize(registry[name].build(spark, sf_dir)))
-
-    total = round(sum(times.values()), 3)
+    times = {name: measure(name, lambda: materialize(
+                 registry[name].build(spark, sf_dir)))
+             for name in sorted(registry)}
 
     # Non-declared side-by-side rows: the xxhash64 at-scale dedup variants
     # next to their md5-portable declared twins, so the oracle-hash tax is
-    # measured every round instead of assumed.  NOT counted in `value` -
-    # the driver gate compares the declared set only.
-    extra = {}
+    # measured every round instead of assumed, and the depth operators.
+    # NOT counted in `value`, which sums the declared set only.
     extra_fns = {**_xxhash64_variants(sf_dir), **_depth_ops(sf_dir)}
-    for name, fn in extra_fns.items():
-        extra[name] = _steady_state(lambda: materialize(fn(spark)))
+    extra = {name: measure(name, lambda: materialize(fn(spark)))
+             for name, fn in extra_fns.items()}
 
-    # self-defense pass: any row > 2x its anchor (and above the absolute
-    # floor) gets an automatic fresh-JVM best-of-3 re-measurement; both
-    # readings are recorded, and the gated total uses the isolated value
-    anchors = load_anchors(os.path.dirname(os.path.abspath(__file__)))
-    all_rows = {**times, **extra}
-    flagged = sorted(
-        name
-        for name, t in all_rows.items()
-        if name in anchors
-        and t > 2 * anchors[name]
-        and t > ISOLATION_FLOOR_S
-    )
-    isolated = _run_isolated_retries(flagged) if flagged else {}
-    retries = {
-        name: {
-            "raw": all_rows[name],
-            "isolated": isolated.get(name),
-            "anchor": anchors[name],
-        }
-        for name in flagged
-    }
-    # min(raw, isolated): both are real measurements of the same plan,
-    # so the smaller one is the better steady-state estimate (a fresh
-    # JVM can also catch a load spike - e.g. csv first-touch I/O)
-    gated_total = round(
-        sum(
-            min(t, isolated[name]) if name in isolated else t
-            for name, t in times.items()
-        ),
-        3,
-    )
-
-    # Field order matters downstream: the driver records the LAST 2000
-    # chars of stdout, so the gating summary (isolated_retries, totals)
-    # goes at the END of the JSON object and survives truncation.  The
-    # full payload is also written to bench_out.json, REWRITTEN after
-    # every completed section: the sf1 smoke + oracle add minutes, and
-    # an external timeout mid-run must not cost the already-measured
-    # declared set (a partial artifact with the gated total beats no
-    # artifact).
+    # `value` goes LAST, so a reader that keeps only the tail of stdout
+    # (2000 chars) still gets the total.  The full payload is also written to bench_out.json,
+    # REWRITTEN after every completed section: the sf1 smoke + oracle
+    # add minutes, and an external timeout mid-run must not cost the
+    # already-measured declared set.
     payload = {
         "metric": "declared_query_set_total_wall",
         "unit": "sec",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "calib_s": calib_s,
         "queries": times,
         "extra_queries": extra,
-        "isolated_retries": retries,
-        "raw_total": total,
-        "value": gated_total,
+        "value": round(sum(times.values()), 3),
     }
-
-    out_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "bench_out.json"
-    )
+    out_path = os.path.join(ROOT, "bench_out.json")
 
     def checkpoint_artifact() -> None:
+        payload["value"] = payload.pop("value")
         with open(out_path, "w") as f:
             json.dump(payload, f, indent=1)
 
-    checkpoint_artifact()  # declared set + retries + gated total on disk
+    checkpoint_artifact()
 
-    sf1_dir = os.environ.get(
-        "SPARK_GRAFT_SF1_DIR",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scale", "sf1"),
-    )
+    sf1_dir = os.environ.get("SPARK_GRAFT_SF1_DIR",
+                             os.path.join(ROOT, ".scale", "sf1"))
     if os.path.isdir(sf1_dir):
         sf1_times, sf1_skipped = _sf1_smoke(spark, sf1_dir, registry,
-                                            priors=sf1_priors)
-        # fold this run's readings into the durable priors ledger
-        # (min-merge: best-ever is the conservative steady-state proxy)
-        merged = dict(sf1_priors)
-        for name, t in sf1_times.items():
-            if isinstance(t, (int, float)):
-                merged[name] = min(merged.get(name, float("inf")),
-                                   float(t))
-        try:
-            with open(os.path.join(
-                os.path.dirname(os.path.abspath(__file__)),
-                ".bench_sf1_priors.json",
-            ), "w") as f:
-                json.dump(dict(sorted(merged.items())), f, indent=1)
-        except OSError:
-            pass
+                                            measure)
         payload["sf1_queries"] = sf1_times
         if sf1_skipped:
             payload["sf1_skipped"] = sf1_skipped
@@ -542,21 +252,21 @@ def main() -> None:
     # one exists: all 50 declared queries at 100x the gated scale with
     # per-query growth vs a text-mode-matched sf1.  Attached, not re-run
     # — a full sf10 pass is a measurement campaign (~1 h), not a
-    # per-round regression test; `campaign_calib_s` records the host
-    # class it was measured on.
-    sf10_block = _load_sf10_campaign(
-        os.path.dirname(os.path.abspath(__file__)))
+    # per-round regression test.
+    sf10_block = _load_sf10_campaign(ROOT)
     if sf10_block:
         payload["sf10_queries"] = sf10_block
         checkpoint_artifact()
 
-    # re-order so the gating summary sits at the END of the printed line
-    # (driver tail truncation keeps the end)
-    for key in ("isolated_retries", "raw_total", "value"):
-        payload[key] = payload.pop(key)
-    checkpoint_artifact()
-    print(json.dumps(payload))
+    # the event log is complete once the application has stopped
+    app_id = spark.sparkContext.applicationId
     spark.stop()
+    try:
+        write_row_metrics(os.path.join(ROOT, "bench_metrics.json"), rows,
+                          events, app_id)
+    finally:
+        shutil.rmtree(events, ignore_errors=True)
+    print(json.dumps(payload))
 
 
 # Scale CORRECTNESS, not just scale wall-clock: the DuckDB oracle re-run
@@ -693,8 +403,8 @@ def _sf1_oracle(spark, sf1_dir: str, registry,
 # extras, run ONCE each at sf1 (10x the gated scale) when the upsampled
 # dataset exists (scripts/build_sf1.py).  This is the scale smoke: plan
 # shape is verified by tests, but only a run shows growth.  Single-run
-# by design - smoke, not anchor; compare against ~10x the sf0.1 row and
-# investigate anything materially super-linear.
+# by design; compare against ~10x the sf0.1 row and investigate
+# anything materially super-linear.
 SF1_SMOKE = [
     # sim_lsh_ann (the adaptive at-scale LSH) moved to the depth rows in
     # round 10 when its declared slot went to the portable twin; it
@@ -706,103 +416,38 @@ SF1_SMOKE = [
 ]
 
 
-def _load_sf1_priors(repo_dir: str) -> dict[str, float]:
-    """Best prior-round sf1 reading per row.  The driver's BENCH_r*.json
-    keeps only the LAST 2000 stdout chars, and the payload deliberately
-    orders the gating summary last - so sf1_queries never survives into
-    those artifacts.  The committed full artifact is bench_out.json
-    (round N-1's run): it must be mined BEFORE this run's first
-    checkpoint overwrites it, which is why main() loads priors at
-    process start and passes them down."""
-    priors: dict[str, float] = {}
-    # the durable ledger first: best-ever readings min-merged across
-    # rounds (bench_out.json only survives one round, so a single
-    # contaminated run would otherwise poison the next round's priors)
-    try:
-        with open(os.path.join(repo_dir, ".bench_sf1_priors.json")) as f:
-            for name, t in json.load(f).items():
-                if isinstance(t, (int, float)):
-                    priors[name] = float(t)
-    except (OSError, json.JSONDecodeError, AttributeError):
-        pass
-    candidates = [os.path.join(repo_dir, "bench_out.json")]
-    candidates += sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json")))
-    for p in candidates:
-        try:
-            with open(p) as f:
-                data = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        src = data.get("parsed") if isinstance(data.get("parsed"), dict) \
-            else data
-        sec = src.get("sf1_queries") if isinstance(src, dict) else None
-        if not isinstance(sec, dict):
-            continue
-        for name, t in sec.items():
-            if isinstance(t, (int, float)):
-                priors[name] = min(priors.get(name, float("inf")), float(t))
-    return priors
-
-
-def _sf1_smoke(spark, sf1_dir: str, registry,
-               budget_s: float = 600.0,
-               priors: dict[str, float] | None = None) -> dict:
+def _sf1_smoke(spark, sf1_dir: str, registry, measure,
+               budget_s: float = 600.0) -> tuple[dict, list[str]]:
     """Smoke at sf1, bounded by ``budget_s`` wall seconds (override:
     $SPARK_GRAFT_SF1_BUDGET).  Under pathological host load the smoke
     truncates rather than risk the whole bench run: completed rows are
     recorded, skipped names land in ``sf1_skipped`` - an explicit
-    marker, never a silent gap.
-
-    Self-defense (r8 verdict #3): single-run sf1 rows produced one
-    contaminated headline reading per round for three of four rounds
-    (r4 join_range_bands, r6 quality_classifier, r8 langid 23.35 s vs
-    6.6 s isolated - langid runs dead-last in a ~19-minute single-JVM
-    run).  A RECURRING row reading > 2x its best prior-artifact value
-    now gets ONE same-JVM re-measure after a state release, min
-    recorded.  Fit/[index_build] rows are exempt: their factories
-    cache the fitted model, so a re-call would time the cache hit and
-    record a bogus near-zero reading."""
+    marker, never a silent gap.  ``measure(group, run)`` times each row
+    under its own job group (``sf1:<row>``) and returns its wall."""
     from pyspark.sql import functions as F
 
     from kafka_cassandra_plugin_spark.catalog import Catalog
     from kafka_cassandra_plugin_spark.operators import similarity as S
 
     budget_s = float(os.environ.get("SPARK_GRAFT_SF1_BUDGET", budget_s))
-    if priors is None:
-        priors = _load_sf1_priors(os.path.dirname(os.path.abspath(__file__)))
     start = time.perf_counter()
     times = {}
     skipped: list[str] = []
 
-    def over_budget() -> bool:
-        return time.perf_counter() - start > budget_s
-
-    def measure(name: str, fn) -> None:
-        t0 = time.perf_counter()
-        fn()
-        t = round(time.perf_counter() - t0, 3)
-        prior = priors.get(name)
-        if (prior is not None and t > 2 * prior and t > 2.0
-                and not over_budget()):
-            release_session_state()
-            t0 = time.perf_counter()
-            fn()
-            t = min(t, round(time.perf_counter() - t0, 3))
-        times[name] = t
+    def run_row(name: str, fn) -> None:
+        if time.perf_counter() - start > budget_s:
+            skipped.append(name)
+        else:
+            times[name] = measure("sf1:" + name, fn)
 
     # one-off index builds recorded separately: build-once/probe-many is
     # the IVF architecture, so the query rows below show PROBE cost (the
     # recurring term), not fit cost
-    t0 = time.perf_counter()
-    registry["sim_ivf_ann"].build(spark, sf1_dir)
-    times["sim_ivf_ann[index_build]"] = round(time.perf_counter() - t0, 3)
+    run_row("sim_ivf_ann[index_build]",
+            lambda: registry["sim_ivf_ann"].build(spark, sf1_dir))
 
     for name in SF1_SMOKE:
-        if over_budget():
-            skipped.append(name)
-            continue
-        release_session_state()
-        measure(name, lambda: materialize(registry[name].build(spark,
+        run_row(name, lambda: materialize(registry[name].build(spark,
                                                                sf1_dir)))
 
     # The declared brute-force build is quadratic BY CONSTRUCTION (its
@@ -810,13 +455,10 @@ def _sf1_smoke(spark, sf1_dir: str, registry,
     # 10x scale-up - that is what "exact baseline" means, not a plan
     # defect).  The smoke row fixes the query count at 200 so it
     # measures corpus-scan growth (~linear) instead.
-    if not over_budget():
-        e = Catalog(spark, sf1_dir).embeddings
-        q200 = e.filter(F.col("vec_id") % 100 == 0)
-        measure("sim_topk_bruteforce[q200]",
-                lambda: materialize(S.brute_force_topk(e, q200, k=10)))
-    else:
-        skipped.append("sim_topk_bruteforce[q200]")
+    e = Catalog(spark, sf1_dir).embeddings
+    q200 = e.filter(F.col("vec_id") % 100 == 0)
+    run_row("sim_topk_bruteforce[q200]",
+            lambda: materialize(S.brute_force_topk(e, q200, k=10)))
 
     depth = _depth_ops(sf1_dir)
     # One-off fit/build cost recorded SEPARATELY from the recurring
@@ -836,18 +478,10 @@ def _sf1_smoke(spark, sf1_dir: str, registry,
                     ("langid", "langid[fit]"),
                     ("dedup_semantic", "dedup_semantic[index_build]"),
                     ("bloom_filter_new", "bloom_filter_new[build]")):
-        if over_budget():
-            skipped.append(row)
-            continue
-        t0 = time.perf_counter()
-        depth[op](spark)  # eager fit; the returned plan is discarded
-        times[row] = round(time.perf_counter() - t0, 3)
+        # eager fit; the returned plan is discarded
+        run_row(row, lambda: depth[op](spark))
     for name, fn in depth.items():
-        if over_budget():
-            skipped.append(name)
-            continue
-        release_session_state()
-        measure(name, lambda: materialize(fn(spark)))
+        run_row(name, lambda: materialize(fn(spark)))
     return times, skipped
 
 
@@ -911,8 +545,8 @@ def _depth_ops(sf_dir):
         # the at-scale LSH (corpus-adaptive numpy path): its declared
         # slot went to the hash-matched portable twin in round 10 (the
         # driver's declared window is 50 queries), but this remains the
-        # production default - per-round reading, anchors and the sf1
-        # smoke row all continue under the same name
+        # production default - per-round reading and the sf1 smoke row
+        # continue under the same name
         from kafka_cassandra_plugin_spark.queries.llm_ops import (
             sim_lsh_ann,
         )
@@ -923,7 +557,7 @@ def _depth_ops(sf_dir):
         # the at-scale IVF (learned spherical-KMeans quantizer): its
         # declared slot went to the hash-matched sample-quantizer twin
         # in round 13 (the sim_lsh_ann precedent) - per-round reading
-        # continues here under the old 1.8 anchor
+        # continues here
         from kafka_cassandra_plugin_spark.queries.llm_ops import (
             sim_ivf_ann_kmeans,
         )
@@ -941,7 +575,7 @@ def _depth_ops(sf_dir):
         docs = Catalog(spark, sf_dir).documents.select("doc_id", "text")
         corpus = docs.filter(F.col("doc_id") % 3 != 0)
         # orderBy before limit: deterministic benchmark membership across
-        # the retry runs (an unordered limit may pick different rows)
+        # runs (an unordered limit may pick different rows)
         bench_set = docs.filter(F.col("doc_id") % 3 == 0).orderBy("doc_id").limit(50).unionByName(
             corpus.filter((F.col("doc_id") % 7 == 1) & (F.instr("text", " ") > 0))
             .orderBy("doc_id")
@@ -1221,8 +855,8 @@ def _depth_ops(sf_dir):
         # whose df exceeds 30% of the corpus BEFORE the postings join,
         # the knob that bounds the candidate stream when a query
         # contains corpus-stopword terms).  Recorded as its own
-        # anchored row so the governed path regression-gates every
-        # round: the synthetic corpus's 31-word natural vocabulary
+        # row so the governed path is measured every round: the
+        # synthetic corpus's 31-word natural vocabulary
         # makes every non-marker term a stopword by df, so this row
         # exercises the governor's pruning, not a no-op branch.
         bm25(spark)  # ensure the shared index is built + persisted
@@ -1526,7 +1160,4 @@ def _depth_ops(sf_dir):
 
 
 if __name__ == "__main__":
-    if len(sys.argv) >= 3 and sys.argv[1] == "--isolated":
-        _isolated_main([n for n in sys.argv[2].split(",") if n])
-    else:
-        main()
+    main()

@@ -178,9 +178,15 @@ def shingle_arrays(df: DataFrame, text_col: str = "text",
     )
 
 
+# Largest C(cap, 2) pair array one capped group may unfold into: ~32 MB
+# of (long, long) structs in a single row.  The default stop-shingle cap
+# of 1000 (499,500 pairs, ~16 MB) fits; a cap above 1414 does not.
+MAX_GROUP_PAIRS = 1_000_000
+
+
 def pair_counts_from_capped_groups(df: DataFrame, key_col: str,
-                                   id_col: str,
-                                   count_col: str) -> DataFrame:
+                                   id_col: str, count_col: str,
+                                   cap: int) -> DataFrame:
     """(id_a, id_b, count) for every id pair co-occurring under a key:
     one groupBy(key) collect_list (sorted), then all (i < j)
     combinations unfold map-side from the array.  The pair multiset is
@@ -191,9 +197,16 @@ def pair_counts_from_capped_groups(df: DataFrame, key_col: str,
     of two join sides plus the joined row stream (guide §2.4).
 
     SCALE CONTRACT: callers must bound the per-key group size BEFORE
-    this (stop-shingle / max_fp_docs caps) - a hot key with f ids
-    materializes one f-element array row here, so an uncapped caller
+    this (stop-shingle / max_fp_docs caps) and pass that bound as
+    ``cap`` - a hot key with f ids materializes one f-element array row
+    and one C(f, 2)-element pair array here, so a cap whose pair array
+    exceeds MAX_GROUP_PAIRS raises ValueError, and an uncapped caller
     must use the self-join instead."""
+    if cap * (cap - 1) // 2 > MAX_GROUP_PAIRS:
+        raise ValueError(
+            f"group cap {cap} unfolds up to {cap * (cap - 1) // 2} pairs "
+            f"per group, above MAX_GROUP_PAIRS={MAX_GROUP_PAIRS}; lower "
+            "the cap or use the self-join path")
     pair_struct = (
         "flatten(transform(ids, (x, i) -> "
         "transform(slice(ids, i + 2, size(ids)), "
@@ -269,7 +282,8 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
         # self-join - an unbounded hot shingle must never materialize
         # as a single collect_list row.
         common = pair_counts_from_capped_groups(sh, "sh", "id",
-                                                "n_common")
+                                                "n_common",
+                                                max_shingle_freq)
     else:
         a = sh.alias("a")
         b = sh.alias("b")

@@ -165,7 +165,7 @@ def fingerprint_overlap(fps: DataFrame, id_col: str = "doc_id",
         # oracle twin) keeps the self-join: a boilerplate fp shared by
         # unbounded many docs must never become one collect_list row.
         pairs = pair_counts_from_capped_groups(sets, "fp", id_col,
-                                               "shared")
+                                               "shared", int(max_fp_docs))
     else:
         a = sets.select(F.col(id_col).alias("id_a"), "fp")
         b = sets.select(F.col(id_col).alias("id_b"), "fp")

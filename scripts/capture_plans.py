@@ -15,15 +15,14 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_cassandra_plugin_spark.queries import load_all
-from kafka_cassandra_plugin_spark.session import get_spark
+import bench  # noqa: E402
+from kafka_cassandra_plugin_spark.queries import load_all  # noqa: E402
 
 
 def main() -> None:
     suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "32"
     registry = load_all()
     if not names:
         names = sorted(registry)
@@ -32,11 +31,7 @@ def main() -> None:
         "plans", os.environ.get("KCP_PLANS_ROUND", "r16"),
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(
-        "kcp-plan-capture",
-        master=f"local[{cpus}]",
-        overrides={"spark.sql.shuffle.partitions": str(2 * int(cpus))},
-    )
+    spark = bench.session("kcp-plan-capture")
     for name in names:
         try:
             df = registry[name].build(spark, sf_dir)

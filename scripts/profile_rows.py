@@ -3,8 +3,9 @@
 
 For each named declared query: run through the noop sink (steady state,
 best-of-3), record wall seconds, the number of Spark jobs the build+run
-issued, and the POST-EXECUTION adaptive plan (isFinalPlan=true, showing
-AQE stage reuse / skew splits that the static explain cannot).
+issued (counted in its bench.measure_row job group), and the
+POST-EXECUTION adaptive plan (isFinalPlan=true, showing AQE stage reuse
+/ skew splits that the static explain cannot).
 
 Usage: [PROFILE_SUFFIX=runtime_before] python scripts/profile_rows.py out.json q1 q2 ...
 """
@@ -14,44 +15,29 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_cassandra_plugin_spark.queries import load_all
-from kafka_cassandra_plugin_spark.session import get_spark
+import bench  # noqa: E402
+from kafka_cassandra_plugin_spark.queries import load_all  # noqa: E402
 
 
 def main() -> None:
     out_path = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "32"
     registry = load_all()
-    spark = get_spark(
-        "kcp-profile",
-        master=f"local[{cpus}]",
-        overrides={"spark.sql.shuffle.partitions": str(2 * int(cpus))},
-    )
-    sc = spark.sparkContext
+    spark = bench.session("kcp-profile")
     registry["agg_pricing_summary"].build(spark, sf_dir).count()  # warmup
 
     results: dict[str, dict] = {}
     for name in names:
-        import gc
-
-        gc.collect()
-        sc.setJobDescription(f"profile: {name}")
-        best, best_jobs, runs = float("inf"), None, 3
-        for _ in range(runs):
-            all0 = int(sc._jsc.sc().dagScheduler().nextJobId())
-            t0 = time.perf_counter()
-            df = registry[name].build(spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            t = time.perf_counter() - t0
-            all1 = int(sc._jsc.sc().dagScheduler().nextJobId())
-            if t < best:
-                best, best_jobs = t, all1 - all0
+        best = min(
+            (bench.measure_row(
+                spark, f"profile:{name}:{i}",
+                lambda: bench.materialize(registry[name].build(spark, sf_dir)))
+             for i in range(3)),
+            key=lambda rec: rec["wall_s"])
         # post-execution adaptive plan: execute the query's OWN
         # QueryExecution (toRdd) so explain shows isFinalPlan=true with
         # AQE reuse/coalesce decisions, then render it
@@ -62,8 +48,7 @@ def main() -> None:
             plan = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
         except Exception as ex:
             plan = f"runtime plan capture failed: {ex}"
-        sc.setJobDescription(None)
-        results[name] = {"sec": round(best, 3), "jobs": best_jobs}
+        results[name] = {"sec": best["wall_s"], "jobs": best["jobs"]}
         rp = os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
             "plans", os.environ.get("KCP_PLANS_ROUND", "r16"),
@@ -71,7 +56,8 @@ def main() -> None:
         )
         with open(rp, "w") as f:
             f.write(plan)
-        print(f"{name}: {best:.3f}s  jobs={best_jobs}", flush=True)
+        print(f"{name}: {best['wall_s']:.3f}s  jobs={best['jobs']}",
+              flush=True)
 
     with open(out_path, "w") as f:
         json.dump(results, f, indent=1)

@@ -23,7 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 from kafka_cassandra_plugin_spark.queries import load_all  # noqa: E402
-from kafka_cassandra_plugin_spark.session import get_spark  # noqa: E402
 
 # cheap -> expensive (sf1 readings x10 as the cost prior)
 DECLARED = [
@@ -68,9 +67,8 @@ def bloom_lifetime_row(spark, sf_dir) -> dict:
     batch = docs.filter(F.col("doc_id") % 6 < 2)
     probe = idx.filter_new(batch)
     plan = P.formatted_plan(probe)
-    t0 = time.perf_counter()
-    bench.materialize(probe)
-    wall = round(time.perf_counter() - t0, 3)
+    wall = bench.measure_row(spark, "bloom_lifetime",
+                             lambda: bench.materialize(probe))["wall_s"]
     idx.words.unpersist()
     return {
         "wall_s": wall,
@@ -86,10 +84,7 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/sf10"
     budget_s = float(sys.argv[2]) if len(sys.argv) > 2 else 1800.0
     registry = load_all()
-    spark = get_spark(
-        "kcp-scale-smoke", master="local[32]",
-        overrides={"spark.sql.shuffle.partitions": "64"},
-    )
+    spark = bench.session("kcp-scale-smoke")
     registry["agg_pricing_summary"].build(spark, sf_dir).count()  # warmup
 
     # optional row subset: $SPARK_GRAFT_SMOKE_ROWS="a,b,c" runs only
@@ -108,13 +103,9 @@ def main() -> None:
         if time.perf_counter() - start > budget_s:
             skipped.append(name)
             continue
-        bench.release_session_state()
-        t0 = time.perf_counter()
-        if name in registry:
-            bench.materialize(registry[name].build(spark, sf_dir))
-        else:
-            bench.materialize(depth_fns[name](spark))
-        times[name] = round(time.perf_counter() - t0, 3)
+        times[name] = bench.measure_row(spark, name, lambda: bench.materialize(
+            registry[name].build(spark, sf_dir) if name in registry
+            else depth_fns[name](spark)))["wall_s"]
         print(f"  {name}: {times[name]} s", flush=True)
     out = {"sf_dir": sf_dir, "queries": times, "skipped": skipped,
            "total": round(sum(times.values()), 3)}

@@ -17,11 +17,12 @@ Design choices that matter for reading the artifact:
   duplication regime, so this campaign runs perturb sf1 (replicas are
   ~jaccard-0.2 distinct docs) against perturb sf10.  The continuity
   sf1 (rotate) stays the per-round bench smoke.
-- **Same session, cheapest-first.** Both scales run in one JVM with
-  bench.release_session_state() between rows (the round-5 lesson:
-  localCheckpoint blocks accrete until a later broadcast build OOMs).
-  sf10 rows run cheapest-first by their sf1 wall so a budget
-  truncation costs the most-extrapolatable information last.
+- **Same session, cheapest-first.** Both scales run in one JVM, each
+  row through bench.measure_row (own job group, state released between
+  rows - the round-5 lesson: localCheckpoint blocks accrete until a
+  later broadcast build OOMs).  sf10 rows run cheapest-first by their
+  sf1 wall so a budget truncation costs the most-extrapolatable
+  information last.
 - **Growth floor.** Rows with sf1 wall < FLOOR_S are dominated by
   fixed job-submission overhead; their ratios are reported but only
   rows with sf1 >= FLOOR_S can be flagged super-linear.  Flag
@@ -42,29 +43,14 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import bench  # noqa: E402
 from kafka_cassandra_plugin_spark.queries import load_all  # noqa: E402
-from kafka_cassandra_plugin_spark.session import get_spark  # noqa: E402
 
 FLOOR_S = 0.5     # sf1 walls under this are job-overhead-dominated
 FLAG_RATIO = 30.0  # >3x super-linear vs the 10x data growth
-
-# Round-over-round self-defense (round-14 verdict #3): growth>30x was
-# the campaign's ONLY rule, so join_star_revenue could move 11.2->43.9 s
-# sf10 between rounds at matched calib with zero flags.  Now every sf10
-# reading is compared against a committed per-row prior
-# (.bench_sf10_priors.json, min-merged across campaigns with the calib
-# it was taken at); a row >PRIOR_FLAG_X its prior at matched calib gets
-# ONE isolated fresh-JVM re-measure before the artifact records it.
-PRIORS_FILE = ".bench_sf10_priors.json"
-PRIOR_FLAG_X = 2.0
-# calib_s observed band on this VM class is 0.216-0.502 (~2.3x); treat
-# runs within CALIB_MATCH_X of the prior's calib as comparable - beyond
-# that the host itself moved and a wall-clock flag is noise
-CALIB_MATCH_X = 1.6
-PRIOR_FLOOR_S = 2.0  # sf10 rows under this are too overhead-noisy to flag
 
 # Written verdicts on rows whose cross-round swings were investigated
 # (round-14 verdict #3 named these two); carried in the artifact so the
@@ -76,8 +62,7 @@ ROW_VERDICTS = {
         "read 11.19 s (= r13's 11.2), and a deliberately co-tenant "
         "re-run (concurrent pytest + a second Spark JVM) reproduced "
         "23.8 s at calib 0.228 - co-tenancy, which the single-JVM calib "
-        "probe cannot see, is the inflation mechanism. Prior committed "
-        "at the 11.19 floor; the 2x rule now catches this class."),
+        "probe cannot see, is the inflation mechanism."),
     "udf_scalar": (
         "r13's 4.6 s sf10 (1.7x growth) was NOT under-measured - the "
         "row is Python-worker-warmup-dominated: by the sf10 pass the "
@@ -88,138 +73,47 @@ ROW_VERDICTS = {
 }
 
 
-def load_priors(repo: str) -> dict:
-    p = os.path.join(repo, PRIORS_FILE)
-    try:
-        with open(p) as f:
-            data = json.load(f)
-        return data if isinstance(data, dict) else {}
-    except (OSError, json.JSONDecodeError):
-        return {}
-
-
-def merge_priors(repo: str, readings: dict, calib_s: float,
-                 section: str = "rows") -> dict:
-    """Min-merge this campaign's sf10 readings into the committed priors
-    (keeping the calib each minimum was taken at) and rewrite the file.
-    Returns the merged table for ``section``."""
-    priors = load_priors(repo)
-    rows = priors.setdefault(section, {})
-    for name, t in readings.items():
-        if t is None:
-            continue
-        cur = rows.get(name)
-        if cur is None or t < cur.get("sf10", float("inf")):
-            rows[name] = {"sf10": t, "calib_s": calib_s}
-    with open(os.path.join(repo, PRIORS_FILE), "w") as f:
-        json.dump(priors, f, indent=1, sort_keys=True)
-    return rows
-
-
-def prior_flags(readings: dict, rows: dict, calib_s: float) -> list[str]:
-    """Names whose sf10 reading exceeds PRIOR_FLAG_X times their prior
-    on a comparable-or-faster host (and above the absolute noise floor).
-
-    Round-16 fix: the old rule suppressed the flag whenever the calib
-    probes differed >CALIB_MATCH_X in EITHER direction, so a 4.5x-over-
-    prior reading on a FASTER host (dedup_ngram_jaccard 138.9 s at calib
-    0.255 vs prior 30.8 at 0.439) sailed through unretried - but a
-    faster CPU probe makes an over-prior wall MORE alarming, not less.
-    Suppress only when this host is SLOWER than the prior's beyond the
-    factor (there a high wall is plausibly just the host)."""
-    flagged = []
-    for name, t in readings.items():
-        cur = rows.get(name)
-        if t is None or cur is None:
-            continue
-        pc = cur.get("calib_s") or calib_s
-        host_slower = calib_s > CALIB_MATCH_X * pc
-        if (not host_slower) and t >= PRIOR_FLOOR_S \
-                and t > PRIOR_FLAG_X * cur["sf10"]:
-            flagged.append(name)
-    return flagged
-
-
-def isolated_sf10_remeasure(names: list[str], sf10_dir: str,
-                            extras: bool = False) -> dict:
-    """One fresh-JVM re-measure of the flagged rows at sf10 (the bench
-    --isolated pattern); {} on failure so the raw readings stand and the
-    artifact says why."""
-    import subprocess
-    mode = "--isolated-extras" if extras else "--isolated"
-    try:
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), mode,
-             ",".join(names), "--sf10", sf10_dir],
-            capture_output=True, text=True, timeout=3000,
-        )
-        for line in reversed(proc.stdout.strip().splitlines()):
-            line = line.strip()
-            if line.startswith("{"):
-                return {k: float(v) for k, v in json.loads(line).items()
-                        if v is not None}
-    except (subprocess.TimeoutExpired, OSError, ValueError):
-        pass
-    return {}
-
-
-def _isolated_main(names: list[str], sf10_dir: str, extras: bool) -> None:
-    """`--isolated a,b` / `--isolated-extras a,b`: measure ONLY the named
-    rows at sf10 in this fresh JVM, best-of-2 (sf10 rows are minutes-
-    scale; two runs bound JIT/first-scan noise without doubling a
-    campaign), print one JSON dict."""
-    # SAME session config as the main campaign pass (and bench.py):
-    # the round-16 triage caught the old 48g driver override making the
-    # re-measure a measurement of a DIFFERENT config - the declared
-    # ngram row reads 63 s in a fresh default-memory JVM and 208 s in a
-    # fresh 48g one on the same data (local[32] heap-size GC cliff), so
-    # an "isolated retry" at 48g can only confirm its own pathology,
-    # never the main pass's reading.
-    spark = get_spark(
-        "kcp-sf10-isolated", master="local[32]",
-        overrides={"spark.sql.shuffle.partitions": "64"},
-    )
-    registry = load_all()
-    registry["agg_pricing_summary"].build(spark, sf10_dir).count()  # warmup
-    fns = {}
-    if extras:
-        fns = {**bench._xxhash64_variants(sf10_dir),
-               **bench._depth_ops(sf10_dir)}
-    out = {}
-    for name in names:
-        best = float("inf")
-        for _ in range(2):
-            bench.release_session_state()
-            t0 = time.perf_counter()
-            try:
-                if extras:
-                    bench.materialize(fns[name](spark))
-                else:
-                    bench.materialize(registry[name].build(spark, sf10_dir))
-            except Exception:
-                break
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 3) if best != float("inf") else None
-    print(json.dumps(out))
-    spark.stop()
-
-
-def run_set(spark, registry, names, sf_dir, budget_s, start, label):
+def run_rows(spark, builders, names, budget_s, start, label):
+    """Wall seconds per row (None when it raised) through
+    bench.measure_row; rows reached after ``budget_s`` are skipped by
+    name."""
     times, skipped = {}, []
     for name in names:
         if time.perf_counter() - start > budget_s:
             skipped.append(name)
             continue
-        bench.release_session_state()
-        t0 = time.perf_counter()
         try:
-            bench.materialize(registry[name].build(spark, sf_dir))
-            times[name] = round(time.perf_counter() - t0, 3)
+            times[name] = bench.measure_row(
+                spark, f"{label}:{name}",
+                lambda: bench.materialize(builders[name](spark)))["wall_s"]
             print(f"  [{label}] {name}: {times[name]} s", flush=True)
         except Exception as exc:  # record, don't die mid-campaign
             times[name] = None
             print(f"  [{label}] {name}: ERROR {exc}", flush=True)
     return times, skipped
+
+
+def cheapest_first(names, times):
+    """``names`` ordered by their measured wall, failed rows last."""
+    done = sorted((n for n in names if times.get(n) is not None),
+                  key=lambda n: times[n])
+    return done + [n for n in names if times.get(n) is None]
+
+
+def growth_table(t1s: dict, t10s: dict, keys) -> tuple[dict, list]:
+    growth, flagged = {}, []
+    for name in keys:
+        t1, t10 = t1s.get(name), t10s.get(name)
+        # `is None` (not truthiness): a genuinely sub-ms wall is a
+        # legitimate reading and must land in the table under the
+        # FLOOR_S rule, not vanish (round-13 advice)
+        if t1 is None or t10 is None:
+            continue
+        ratio = round(t10 / max(t1, 1e-3), 2)
+        growth[name] = ratio
+        if t1 >= FLOOR_S and ratio > FLAG_RATIO:
+            flagged.append(name)
+    return growth, flagged
 
 
 # At-scale-default extras (round-14, verdict #2): a real 100 TB run
@@ -233,28 +127,11 @@ DEFAULT_EXTRAS = ("sim_lsh_ann", "sim_ivf_ann_kmeans", "curation_funnel",
                   "dsir_select")
 
 
-def run_extras(spark, fns, names, budget_s, start, label):
-    times, skipped = {}, []
-    for name in names:
-        if time.perf_counter() - start > budget_s:
-            skipped.append(name)
-            continue
-        bench.release_session_state()
-        t0 = time.perf_counter()
-        try:
-            bench.materialize(fns[name](spark))
-            times[name] = round(time.perf_counter() - t0, 3)
-            print(f"  [{label}] {name}: {times[name]} s", flush=True)
-        except Exception as exc:  # record, don't die mid-campaign
-            times[name] = None
-            print(f"  [{label}] {name}: ERROR {exc}", flush=True)
-    return times, skipped
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf10", default="/root/repo/.scale/sf10")
-    ap.add_argument("--sf1", default="/root/repo/.scale/sf1_perturb")
+    ap.add_argument("--sf10", default=os.path.join(REPO, ".scale", "sf10"))
+    ap.add_argument("--sf1",
+                    default=os.path.join(REPO, ".scale", "sf1_perturb"))
     ap.add_argument("--budget", type=float, default=7200.0)
     ap.add_argument("--only", default="",
                     help="comma-separated declared-name subset")
@@ -264,19 +141,7 @@ def main() -> None:
     ap.add_argument("--skip-declared", action="store_true",
                     help="run only the extras block (declared set "
                          "untouched; artifact goes to the partial path)")
-    ap.add_argument("--isolated", default="",
-                    help="internal: fresh-JVM re-measure of named "
-                         "declared rows at sf10, print JSON, exit")
-    ap.add_argument("--isolated-extras", default="",
-                    help="internal: same for extras rows")
     args = ap.parse_args()
-
-    if args.isolated or args.isolated_extras:
-        _isolated_main(
-            [n for n in (args.isolated or args.isolated_extras).split(",")
-             if n],
-            args.sf10, extras=bool(args.isolated_extras))
-        return
 
     registry = load_all()
     names = sorted(registry)
@@ -286,83 +151,29 @@ def main() -> None:
     if args.skip_declared:
         names = []
 
-    spark = get_spark(
-        "kcp-sf10-campaign", master="local[32]",
-        overrides={
-            "spark.sql.shuffle.partitions": "64",
-            # one long JVM runs ~115 materializations back to back and
-            # localCheckpoint blocks accrete between the gc ticks; the
-            # session default 8g heap OOM'd the adaptive-LSH sf10 row
-            # (UNABLE_TO_ACQUIRE_MEMORY) on a 125 GB box - give the
-            # campaign real headroom (driver.memory is JVM-start-only,
-            # and this script owns the first session of its process)
-            "spark.driver.memory": "48g",
-        },
-    )
+    # 48g, not the 8g session default: one long JVM runs ~115
+    # materializations back to back, localCheckpoint blocks accrete
+    # between the gc ticks, and at 8g the adaptive-LSH sf10 row failed
+    # with UNABLE_TO_ACQUIRE_MEMORY.  Known cost: the declared ngram row
+    # read 208 s in a fresh 48g JVM vs 63 s at 8g on the same data (a
+    # GC cliff at local[32]), so compare that row only across campaigns
+    # run at the same heap.  driver.memory is JVM-start-only, and this
+    # script owns the first session of its process.
+    spark = bench.session("kcp-sf10-campaign",
+                          **{"spark.driver.memory": "48g"})
     registry["agg_pricing_summary"].build(spark, args.sf1).count()  # warmup
-
-    def _calib() -> float:
-        from pyspark.sql import functions as F  # noqa: F401
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "bit_xor(xxhash64(id)) AS s", "count(1) AS n").collect()
-        return time.perf_counter() - t0
-
-    calib_s = round(min(_calib(), _calib()), 3)
     start = time.perf_counter()
 
-    sf1_times, sf1_skipped = run_set(
-        spark, registry, names, args.sf1, args.budget, start, "sf1")
+    def declared(sf_dir):
+        return {n: (lambda s, q=registry[n]: q.build(s, sf_dir))
+                for n in names}
 
-    # sf10 cheapest-first by the just-measured sf1 wall
-    order = sorted((n for n in names if sf1_times.get(n) is not None),
-                   key=lambda n: sf1_times[n])
-    order += [n for n in names if sf1_times.get(n) is None]
-    sf10_times, sf10_skipped = run_set(
-        spark, registry, order, args.sf10, args.budget, start, "sf10")
-
-    def growth_table(t1s: dict, t10s: dict, keys) -> tuple[dict, list]:
-        growth, flagged = {}, []
-        for name in keys:
-            t1, t10 = t1s.get(name), t10s.get(name)
-            # `is None` (not truthiness): a genuinely sub-ms wall is a
-            # legitimate reading and must land in the table under the
-            # FLOOR_S rule, not vanish (round-13 advice)
-            if t1 is None or t10 is None:
-                continue
-            ratio = round(t10 / max(t1, 1e-3), 2)
-            growth[name] = ratio
-            if t1 >= FLOOR_S and ratio > FLAG_RATIO:
-                flagged.append(name)
-        return growth, flagged
-
+    sf1_times, sf1_skipped = run_rows(
+        spark, declared(args.sf1), names, args.budget, start, "sf1")
+    sf10_times, sf10_skipped = run_rows(
+        spark, declared(args.sf10), cheapest_first(names, sf1_times),
+        args.budget, start, "sf10")
     growth, flagged = growth_table(sf1_times, sf10_times, names)
-
-    # ---- per-row prior defense (round-14 verdict #3): compare every
-    # sf10 reading to its committed cross-round minimum at matched
-    # calib; >2x gets ONE fresh-JVM isolated re-measure, and the
-    # artifact records raw + isolated + prior so a genuine regression
-    # and a loaded-window reading are distinguishable ever after
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    prior_rows = load_priors(repo).get("rows", {})
-    pflags = prior_flags(sf10_times, prior_rows, calib_s)
-    prior_retries = {}
-    if pflags:
-        print(f"  [prior-flag] {pflags} exceed 2x committed prior at "
-              f"matched calib - isolated re-measure", flush=True)
-        iso = isolated_sf10_remeasure(pflags, args.sf10)
-        for name in pflags:
-            prior_retries[name] = {
-                "raw": sf10_times.get(name),
-                "isolated": iso.get(name),
-                "prior": prior_rows[name]["sf10"],
-                "prior_calib_s": prior_rows[name].get("calib_s"),
-            }
-            if iso.get(name) is not None:
-                sf10_times[name] = min(sf10_times[name], iso[name])
-        # growth ratios follow the settled readings
-        growth, flagged = growth_table(sf1_times, sf10_times, names)
-    merge_priors(repo, sf10_times, calib_s, section="rows")
 
     # ---- extras block: the at-scale-default paths (adaptive LSH,
     # learned IVF, funnel, governed BM25, learned gates), same budget
@@ -376,57 +187,29 @@ def main() -> None:
                **bench._depth_ops(args.sf10)}
         xnames = (sorted(x1) if args.extras.strip() == "all"
                   else [n for n in extras_req if n in x1])
-        ex1, ex1_skip = run_extras(
+        ex1, ex1_skip = run_rows(
             spark, x1, xnames, args.budget, start, "extras-sf1")
-        xorder = sorted((n for n in xnames if ex1.get(n) is not None),
-                        key=lambda n: ex1[n])
-        xorder += [n for n in xnames if ex1.get(n) is None]
-        ex10, ex10_skip = run_extras(
-            spark, x10, xorder, args.budget, start, "extras-sf10")
-        # same per-row prior defense as the declared set
-        ex_prior_rows = load_priors(repo).get("extras", {})
-        ex_pflags = prior_flags(ex10, ex_prior_rows, calib_s)
-        ex_prior_retries = {}
-        if ex_pflags:
-            print(f"  [prior-flag extras] {ex_pflags} - isolated "
-                  f"re-measure", flush=True)
-            iso = isolated_sf10_remeasure(ex_pflags, args.sf10, extras=True)
-            for name in ex_pflags:
-                ex_prior_retries[name] = {
-                    "raw": ex10.get(name),
-                    "isolated": iso.get(name),
-                    "prior": ex_prior_rows[name]["sf10"],
-                    "prior_calib_s": ex_prior_rows[name].get("calib_s"),
-                }
-                if iso.get(name) is not None:
-                    ex10[name] = min(ex10[name], iso[name])
+        ex10, ex10_skip = run_rows(
+            spark, x10, cheapest_first(xnames, ex1), args.budget, start,
+            "extras-sf10")
         exg, exf = growth_table(ex1, ex10, xnames)
         extras_out = {
             "extras_sf1": ex1, "extras_sf10": ex10,
             "extras_growth": exg, "extras_flagged": exf,
-            "extras_prior_retries": ex_prior_retries,
             "extras_skipped": {"sf1": ex1_skip, "sf10": ex10_skip},
         }
-        # min-merge is always safe (a loaded reading can never lower a
-        # prior), so partial runs feed the priors too
-        merge_priors(repo, ex10, calib_s, section="extras")
 
-    registry_size = len(registry)
     partial = bool(args.only.strip()) or args.skip_declared
     out = {
-        "sf1_dir": args.sf1, "sf10_dir": args.sf10, "calib_s": calib_s,
+        "sf1_dir": args.sf1, "sf10_dir": args.sf10,
         "text_mode": "perturb", "floor_s": FLOOR_S,
         "flag_ratio": FLAG_RATIO,
         # a subset run is marked as such so bench.py's payload block
         # can never silently shadow a full campaign (round-13 advice)
-        "n_queries": len(names), "registry_size": registry_size,
+        "n_queries": len(names), "registry_size": len(registry),
         "only": sorted(set(names)) if partial else None,
         "sf1": sf1_times, "sf10": sf10_times, "growth": growth,
-        "flagged": flagged, "prior_retries": prior_retries,
-        "prior_flag_x": PRIOR_FLAG_X, "calib_match_x": CALIB_MATCH_X,
-        "row_verdicts": ROW_VERDICTS,
-        "priors": {n: prior_rows.get(n) for n in names
-                   if prior_rows.get(n) is not None},
+        "flagged": flagged, "row_verdicts": ROW_VERDICTS,
         "skipped": {"sf1": sf1_skipped, "sf10": sf10_skipped},
         "sf1_total": round(
             sum(t for t in sf1_times.values() if t is not None), 3),
@@ -440,12 +223,12 @@ def main() -> None:
         paths = [os.path.join(scale_dir, "sf10_campaign_partial.json")]
     else:
         paths = [os.path.join(scale_dir, "sf10_campaign.json"),
-                 os.path.join(repo, "SF10_CAMPAIGN.json")]
+                 os.path.join(REPO, "SF10_CAMPAIGN.json")]
     for p in paths:
         with open(p, "w") as f:
             json.dump(out, f, indent=1)
     print(json.dumps({k: out[k] for k in
-                      ("calib_s", "sf1_total", "sf10_total", "flagged")}))
+                      ("sf1_total", "sf10_total", "flagged")}))
     if extras_out:
         print(json.dumps({k: extras_out[k] for k in
                           ("extras_growth", "extras_flagged")}))

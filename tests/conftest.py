@@ -54,11 +54,14 @@ def pytest_collection_modifyitems(config, items):
 
 @pytest.fixture(scope="session")
 def spark():
-    # KCP_TEST_MASTER lets the same suites run under a multi-JVM master
-    # (e.g. `local-cluster[2,4,2048]`) to catch single-JVM assumptions —
-    # localCheckpoint block locality, Hadoop-FS rename visibility — that
-    # local[8] cannot exercise (round-13 smoke, BASELINE.md).
-    master = os.environ.get("KCP_TEST_MASTER", "local[8]")
+    # local[$SPARK_GRAFT_CPUS] (8 when unset) sizes the master to the
+    # host.  KCP_TEST_MASTER lets the same suites run under a multi-JVM
+    # master (e.g. `local-cluster[2,4,2048]`) to catch single-JVM
+    # assumptions — localCheckpoint block locality, Hadoop-FS rename
+    # visibility — that a local master cannot exercise (round-13 smoke,
+    # BASELINE.md).
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "8"
+    master = os.environ.get("KCP_TEST_MASTER", f"local[{cpus}]")
     overrides = {"spark.sql.shuffle.partitions": "8"}
     if not master.startswith("local["):
         # separate executor JVMs spawn their own Python workers, which

@@ -1,8 +1,7 @@
-"""bench.py self-defense plumbing (round 5): the anchor miner must read
-every artifact shape the driver records - a parsed payload dict, a raw
-payload, or a truncated 2000-char stdout tail - and always take the
-minimum observed reading per row (a best-observed full-run value is a
-conservative steady-state proxy).  Pure-python: no Spark session."""
+"""bench.py harness: every row is measured through ``measure_row`` (its
+own Spark job group) and completed from the event log into one
+``bench_metrics.json`` record per row; the recorded sf10 campaign rides
+the payload as a summary block."""
 
 from __future__ import annotations
 
@@ -20,154 +19,85 @@ def write(tmp_path, name, payload):
         json.dump(payload, f)
 
 
-class TestLoadAnchors:
-    def test_parsed_payload_shape(self, tmp_path):
-        write(tmp_path, "BENCH_r01.json", {
-            "parsed": {
-                "queries": {"q_alpha": 1.5, "csv_roundtrip": 0.6},
-                "extra_queries": {"x_beta": 2.0},
-            },
-        })
-        a = bench.load_anchors(str(tmp_path))
-        assert a["q_alpha"] == 1.5
-        assert a["x_beta"] == 2.0
-        # explicit BASELINE anchors are AUTHORITATIVE (round 9): a
-        # recorded reading below a with-cause re-anchor must not
-        # silently undo it
-        assert a["csv_roundtrip"] == bench.EXPLICIT_ANCHORS["csv_roundtrip"]
+class TestMeasureRow:
+    def test_jobs_land_in_the_rows_own_group(self, spark):
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        df = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count()
+        a = bench.measure_row(spark, "bench-test:a",
+                              lambda: bench.materialize(df))
+        b = bench.measure_row(spark, "bench-test:b",
+                              lambda: spark.range(10).collect())
+        ja = set(tracker.getJobIdsForGroup("bench-test:a"))
+        jb = set(tracker.getJobIdsForGroup("bench-test:b"))
+        assert a["jobs"] == len(ja) >= 1 and a["tasks"] >= 1
+        assert b["jobs"] == len(jb) >= 1
+        assert not ja & jb
+        assert a["failed_tasks"] == b["failed_tasks"] == 0
+        # the group ends with the row: later work lands in neither
+        assert sc.getLocalProperty("spark.jobGroup.id") is None
+        spark.range(10).collect()
+        assert set(tracker.getJobIdsForGroup("bench-test:b")) == jb
 
-    def test_truncated_tail_shape(self, tmp_path):
-        tail = ('_wall", "value": 60.4, "unit": "sec", "queries": '
-                '{"q_gamma": 3.25, "q_delta[xxhash64]": 1.75, "sf": 0.1')
-        write(tmp_path, "BENCH_r02.json", {"parsed": None, "tail": tail})
-        a = bench.load_anchors(str(tmp_path))
-        assert a["q_gamma"] == 3.25
-        assert a["q_delta[xxhash64]"] == 1.75
-        assert "value" not in a and "sf" not in a  # meta keys never anchor
+    def test_group_cleared_when_the_row_raises(self, spark):
+        def boom():
+            raise RuntimeError("row failed")
 
-    def test_min_across_rounds(self, tmp_path):
-        write(tmp_path, "BENCH_r01.json", {"parsed": {"queries": {"q": 2.0}}})
-        write(tmp_path, "BENCH_r02.json", {"parsed": {"queries": {"q": 1.2}}})
-        write(tmp_path, "BENCH_r03.json", {"parsed": None,
-                                           "tail": '"q": 4.75, '})
-        assert bench.load_anchors(str(tmp_path))["q"] == 1.2
-
-    def test_explicit_anchors_survive_empty_dir(self, tmp_path):
-        a = bench.load_anchors(str(tmp_path))
-        assert a == bench.EXPLICIT_ANCHORS
-
-    def test_unreadable_artifact_skipped(self, tmp_path):
-        (tmp_path / "BENCH_r01.json").write_text("{not json")
-        write(tmp_path, "BENCH_r02.json", {"parsed": {"queries": {"q": 0.9}}})
-        assert bench.load_anchors(str(tmp_path))["q"] == 0.9
-
-    def test_growth_ratios_never_anchor(self, tmp_path):
-        """Round-14 verdict #1: a truncated tail that starts inside the
-        sf10-campaign payload must NOT donate growth RATIOS (or sf1/sf10
-        seconds) as per-query sf0.1 anchors - dedup_simhash absorbed its
-        r13 growth ratio 1.28 as an 'anchor' and fired a spurious
-        fresh-JVM retry recorded as a 2.35x regression."""
-        tail = ('"sim_lsh_ann_portable": 104.825, "dedup_simhash": 29.2}, '
-                '"growth": {"dedup_simhash": 1.28, "cas_lifecycle": 1.58}, '
-                '"sf1_extra": {"langid": 5.86}}, '
-                '"raw_total": 71.8, "value": 69.29}')
-        write(tmp_path, "BENCH_r01.json", {"parsed": None, "tail": tail})
-        a = bench.load_anchors(str(tmp_path))
-        assert "dedup_simhash" not in a or a["dedup_simhash"] > 2.0
-        assert "langid" not in a
-        # present only if EXPLICIT_ANCHORS carries it - never the sf10
-        # campaign seconds from the tail
-        assert a.get("sim_lsh_ann_portable") != 104.825
-
-    def test_isolated_retries_donate_fresh_jvm_readings(self, tmp_path):
-        """The isolated_retries block's 'isolated' values are genuine
-        fresh-JVM best-of-5 sf0.1 seconds - the one trustworthy region
-        of a recent truncated tail - and must anchor under the row name,
-        while the sibling raw/anchor values must not."""
-        tail = ('"isolated_retries": {"agg_distinct_sets": {"raw": 1.731, '
-                '"isolated": 0.435, "anchor": 0.785}, "dedup_simhash": '
-                '{"raw": 3.09, "isolated": 3.008, "anchor": 1.28}}, '
-                '"raw_total": 68.1, "value": 63.46}')
-        write(tmp_path, "BENCH_r01.json", {"parsed": None, "tail": tail})
-        a = bench.load_anchors(str(tmp_path))
-        assert a["agg_distinct_sets"] == 0.435
-        assert a["dedup_simhash"] == 3.008  # isolated, not the 1.28 anchor
-        assert "raw" not in a and "isolated" not in a and "anchor" not in a
-
-    def test_truncated_queries_region_unclosed_at_end(self, tmp_path):
-        """A queries object cut off by the 2000-char window still mines
-        up to the cut."""
-        tail = '"queries": {"q_eps": 2.5, "q_zeta": 0.8'
-        write(tmp_path, "BENCH_r01.json", {"parsed": None, "tail": tail})
-        a = bench.load_anchors(str(tmp_path))
-        assert a["q_eps"] == 2.5 and a["q_zeta"] == 0.8
-
-    def test_real_round14_artifact_depollutes(self):
-        """Against the committed artifacts: dedup_simhash's anchor must
-        never be the 1.28 growth ratio absorbed from a growth table, and
-        no mined anchor may be a dimensionless ratio (spot rows named in
-        the round-14 verdict).  The genuine floor moves as faster hosts
-        land artifacts (r15's 8-core driver run measured 1.851), so the
-        bound is 'strictly above the known pollution value', not a host
-        band."""
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        if not os.path.exists(os.path.join(repo, "BENCH_r14.json")):
-            return
-        a = bench.load_anchors(repo)
-        assert a.get("dedup_simhash", 99.0) > 1.5
-        # langid's polluted 'anchor' was its sf10 growth RATIO 5.86; the
-        # genuine source is bench_out.json's extra_queries sf0.1 reading
-        # (8.965 in the committed r14 payload) - strictly above the ratio
-        assert "langid" not in a or a["langid"] > 6.0
-        # cas_lifecycle's 1.58 'anchor' was its r13 growth ratio; its
-        # genuine artifact floor is 1.655 (r02 queries region)
-        assert a.get("cas_lifecycle", 0) != 1.58
-
-    def test_reanchored_rows_ignore_stale_artifact_minima(self, tmp_path):
-        """The r8 verdict item: udf_scalar's 0.72 artifact minimum
-        predates the openCost trade; with the old min-merge it kept
-        winning and drifted the row toward the 2x gate."""
-        write(tmp_path, "BENCH_r01.json", {
-            "parsed": {"queries": {"udf_scalar": 0.72,
-                                   "lm_perplexity": 0.40}},
-        })
-        a = bench.load_anchors(str(tmp_path))
-        assert a["udf_scalar"] == bench.EXPLICIT_ANCHORS["udf_scalar"]
-        assert a["lm_perplexity"] == bench.EXPLICIT_ANCHORS["lm_perplexity"]
+        try:
+            bench.measure_row(spark, "bench-test:raises", boom)
+        except RuntimeError:
+            pass
+        else:
+            raise AssertionError("measure_row swallowed the row's error")
+        assert spark.sparkContext.getLocalProperty(
+            "spark.jobGroup.id") is None
 
 
-class TestSf1Priors:
-    """The r8 verdict item #3: sf1 smoke rows were single-run with no
-    retry, producing one contaminated headline reading per round; the
-    retry trigger compares against the best prior-artifact sf1 value."""
+def _job(jid, group, stage):
+    props = {"spark.jobGroup.id": group} if group else {}
+    return {"Event": "SparkListenerJobStart", "Job ID": jid,
+            "Submission Time": jid, "Stage IDs": [stage],
+            "Properties": props}
 
-    def test_minimum_across_rounds_and_shapes(self, tmp_path):
-        write(tmp_path, "BENCH_r01.json", {
-            "parsed": {"sf1_queries": {"langid": 6.57, "text_stats": 3.0}},
-        })
-        write(tmp_path, "BENCH_r02.json", {
-            "sf1_queries": {"langid": 23.35},  # raw-payload shape
-        })
-        p = bench._load_sf1_priors(str(tmp_path))
-        assert p["langid"] == 6.57
-        assert p["text_stats"] == 3.0
 
-    def test_missing_or_unreadable(self, tmp_path):
-        assert bench._load_sf1_priors(str(tmp_path)) == {}
-        (tmp_path / "BENCH_r01.json").write_text("{not json")
-        write(tmp_path, "BENCH_r02.json", {"parsed": {"queries": {}}})
-        assert bench._load_sf1_priors(str(tmp_path)) == {}
+def _task(stage, cpu_ns, gc_ms, shuffle_b, spill_b, failed=False):
+    return {"Event": "SparkListenerTaskEnd", "Stage ID": stage,
+            "Task Info": {"Failed": failed},
+            "Task Metrics": {
+                "Executor CPU Time": cpu_ns, "JVM GC Time": gc_ms,
+                "Shuffle Write Metrics": {"Shuffle Bytes Written": shuffle_b},
+                "Memory Bytes Spilled": spill_b}}
 
-    def test_bench_out_full_artifact_mined(self, tmp_path):
-        """The driver's BENCH_r*.json keeps only the last 2000 stdout
-        chars, which the payload's deliberate field ordering fills with
-        the gating summary - sf1_queries only survives in the committed
-        full artifact bench_out.json (the round-9 root cause of the
-        langid retry never firing)."""
-        write(tmp_path, "bench_out.json", {
-            "queries": {}, "sf1_queries": {"langid": 6.9},
-        })
-        assert bench._load_sf1_priors(str(tmp_path))["langid"] == 6.9
+
+class TestRowMetrics:
+    def test_one_record_per_measured_row(self, tmp_path):
+        mb = 2**20
+        events = [
+            _job(0, None, 0), _task(0, 9e9, 900, 0, 0),  # warmup, no group
+            _job(1, "q_a", 1), _task(1, 1e9, 100, mb, 0),
+            _task(1, 1e9, 0, mb, 2 * mb),
+            _job(2, "q_b", 2), _task(2, 5e8, 50, 0, 0),
+            _job(3, "q_a", 3), _task(3, 1e9, 0, 0, 0),
+            _job(4, "other", 4), _task(4, 7e9, 0, 0, 0),
+        ]
+        (tmp_path / "local-1").write_text(
+            "\n".join(json.dumps(e) for e in events) + "\n")
+        rows = {name: {"wall_s": 1.0, "jobs": 1, "tasks": 1,
+                       "failed_tasks": 0}
+                for name in ("q_a", "q_b", "q_none")}
+        out_path = tmp_path / "bench_metrics.json"
+        bench.write_row_metrics(str(out_path), rows, str(tmp_path),
+                                "local-1")
+        out = json.loads(out_path.read_text())
+        assert set(out) == {"q_a", "q_b", "q_none"}
+        assert out["q_a"] == {"wall_s": 1.0, "jobs": 1, "tasks": 1,
+                              "failed_tasks": 0, "task_cpu_s": 3.0,
+                              "gc_s": 0.1, "shuffle_mb": 2.0,
+                              "spill_mb": 2.0}
+        assert out["q_b"]["task_cpu_s"] == 0.5
+        assert out["q_b"]["gc_s"] == 0.05
+        # a row whose jobs are missing from the log reads zero, not absent
+        assert out["q_none"]["task_cpu_s"] == 0.0
 
 
 class TestLoadSf10Campaign:
@@ -197,7 +127,7 @@ class TestLoadSf10Campaign:
         assert block["growth_max"] == 9.5
         assert block["growth_top"] == {"q": 9.5}
         assert block["detail"] == "SF10_CAMPAIGN.json"
-        # no queries/isolated keys the anchor miner could misread
+        # no queries/isolated keys a reader could take for sf0.1 rows
         dumped = json.dumps(block)
         assert '"queries"' not in dumped and '"isolated' not in dumped
 

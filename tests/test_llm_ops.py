@@ -376,6 +376,26 @@ class TestStopShingleCap:
         sig = inspect.signature(D.ngram_jaccard_pairs)
         assert sig.parameters["max_shingle_freq"].default == 1000
 
+    def test_pair_unfold_refuses_a_cap_past_the_pair_bound(self, spark):
+        """The capped pair unfold materializes up to C(cap, 2) pair
+        structs in one row: a cap past MAX_GROUP_PAIRS is refused before
+        any plan is built (C(1414, 2) fits, C(1415, 2) does not)."""
+        df = spark.createDataFrame([(7, 1)], "sh long, id long")
+        D.pair_counts_from_capped_groups(df, "sh", "id", "n", 1414)
+        with pytest.raises(ValueError, match="MAX_GROUP_PAIRS"):
+            D.pair_counts_from_capped_groups(df, "sh", "id", "n", 1415)
+
+    def test_pair_unfold_accepts_the_default_cap(self, spark):
+        import inspect
+
+        cap = inspect.signature(
+            D.ngram_jaccard_pairs).parameters["max_shingle_freq"].default
+        df = spark.createDataFrame([(7, 1), (7, 2), (7, 3), (8, 1), (8, 3)],
+                                   "sh long, id long")
+        got = {tuple(r) for r in D.pair_counts_from_capped_groups(
+            df, "sh", "id", "n", cap).collect()}
+        assert got == {(1, 2, 1), (1, 3, 2), (2, 3, 1)}
+
     def test_hashed_shingle_join_equals_string_join(self, spark, docs):
         """The round-10 slimming (self-join on xxhash64 shingle keys
         instead of n-gram strings) must be invisible in the output:
