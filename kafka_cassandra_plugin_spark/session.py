@@ -49,6 +49,7 @@ ENGINE_DEFAULTS: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
     "spark.sql.shuffle.partitions": "32",
     "spark.ui.enabled": "false",
+    "spark.ui.showConsoleProgress": "false",
     "spark.driver.memory": "8g",
 }
 
@@ -163,7 +164,8 @@ def get_spark(
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable engine confs to an externally-created
     session (the driver passes us its own SparkSession in ``entry()``)."""
-    static = {"spark.driver.memory", "spark.ui.enabled"}
+    static = {"spark.driver.memory", "spark.ui.enabled",
+              "spark.ui.showConsoleProgress"}
     for k, v in ENGINE_DEFAULTS.items():
         if k in static:
             continue

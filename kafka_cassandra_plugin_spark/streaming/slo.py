@@ -210,24 +210,6 @@ def _funnel_doc_rows(rng, n: int, start_id: int,
     ]
 
 
-def calib_probe(spark: SparkSession, runs: int = 2) -> float:
-    """Host-speed calibration: best-of-``runs`` wall of the bench.py
-    range+xxhash probe (200M ids, 32 slices).  Under the test sessions'
-    local[8] this reads ~0.33 s on the fast host-window class (vs ~0.21
-    for the 32-thread bench probe on the same window) - recorded
-    alongside every funnel-cadence measurement so the floor claim is
-    host-adjustable instead of quiet-window-conditional (round-14
-    verdict #5)."""
-    best = float("inf")
-    for i in range(runs + 1):
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "bit_xor(xxhash64(id)) AS s", "count(1) AS n").collect()
-        if i > 0:  # drop the first run: in a cold session it is JIT
-            best = min(best, time.perf_counter() - t0)
-    return round(best, 3)
-
-
 def measure_funnel_cadence(
     spark: SparkSession,
     work_dir: str,
@@ -270,7 +252,6 @@ def measure_funnel_cadence(
     from ..operators.dedup_index import MinHashIndex
     from ..operators.lm import NgramLM
 
-    calib_before = calib_probe(spark)
     rng = random.Random(7)
     vocab = [f"w{i:03d}" for i in range(200)]
     seed_rows = _funnel_doc_rows(rng, 300, 1_000_000, vocab, 60)
@@ -337,19 +318,12 @@ def measure_funnel_cadence(
             f"funnel cadence: {len(walls)}/{total} micro-batches completed "
             f"within {timeout_s}s"
         )
-    # calib BEFORE and AFTER bracket the measurement window; the gate
-    # adjusts by the WORSE (higher) reading - a host that degraded
-    # during the stream shows up in at least one bracket
-    calib_after = calib_probe(spark)
     measured = walls[warmup:]
     ms = sorted(measured)
     p50 = statistics.median(measured)
     p90 = ms[min(len(ms) - 1, int(0.9 * len(ms)))]
     return {
         "n": len(measured),
-        "calib_before_s": calib_before,
-        "calib_after_s": calib_after,
-        "calib_s": max(calib_before, calib_after),
         "batch_rows": batch_rows,
         "trigger_ms": trigger_ms,
         "p50_s": round(p50, 3),
@@ -451,119 +425,3 @@ def measure_lease_failover(
         "best_s": min(gaps.values()),
         "gaps": gaps,
     }
-
-
-def isolated_notification_remeasure(timeout_s: float = 240.0,
-                                    **kwargs) -> dict | None:
-    """Re-run :func:`measure_change_notification_latency` in a FRESH JVM
-    subprocess and return its stats dict (``None`` on any failure).
-
-    Round-14 finding: the wall-clock SLO gates encode the reference's
-    500 ms-poll envelope correctly, but asserting them inside a
-    46-minute 32-core suite flakes — 4/11 failed in-suite (p50 1.13 s /
-    max 3.11 s on the loaded window) and 11/11 passed isolated minutes
-    later.  bench.py already solved this class with fresh-JVM isolated
-    retries; this is the same self-defense for the SLO fixtures: the
-    retry removes suite-session GC/state neighborhood and gets a second
-    chance at a quiet host window, while a genuine product regression
-    still fails (it reproduces in the fresh JVM).
-    """
-    import json
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))))
-    env = dict(os.environ)
-    env["PYTHONPATH"] = repo + (
-        os.pathsep + env["PYTHONPATH"] if env.get("PYTHONPATH") else "")
-    try:
-        proc = subprocess.run(
-            [sys.executable, "-m",
-             "kafka_cassandra_plugin_spark.streaming.slo",
-             json.dumps(kwargs)],
-            capture_output=True, text=True, timeout=timeout_s, env=env,
-            cwd=repo,
-        )
-        for line in reversed(proc.stdout.strip().splitlines()):
-            line = line.strip()
-            if line.startswith("{"):
-                return json.loads(line)
-    except (subprocess.TimeoutExpired, OSError, ValueError):
-        pass
-    return None
-
-
-def isolated_funnel_floor_measure(timeout_s: float = 600.0,
-                                  **kwargs) -> dict | None:
-    """Measure the funnel cadence in a FRESH local[32] JVM and return
-    the stats dict (``None`` on failure).
-
-    This is the floor CLAIM's context of record (round-14 verdict #5):
-    the 8 s batch-200 target was measured under local[32]
-    (scripts/funnel_floor_probe.py), while the suite session runs
-    local[8] - an in-suite measurement structurally cannot reproduce
-    it.  The fresh JVM also removes suite-session GC/state neighborhood
-    the way bench.py's isolated retries do, so the gated reading is
-    hand-picked-window-free: host speed is recorded by calib brackets
-    inside the returned artifact and the caller adjusts the gate by
-    them."""
-    import json
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))))
-    env = dict(os.environ)
-    env["PYTHONPATH"] = repo + (
-        os.pathsep + env["PYTHONPATH"] if env.get("PYTHONPATH") else "")
-    try:
-        proc = subprocess.run(
-            [sys.executable, "-m",
-             "kafka_cassandra_plugin_spark.streaming.slo",
-             json.dumps({"kind": "funnel", **kwargs})],
-            capture_output=True, text=True, timeout=timeout_s, env=env,
-            cwd=repo,
-        )
-        for line in reversed(proc.stdout.strip().splitlines()):
-            line = line.strip()
-            if line.startswith("{"):
-                return json.loads(line)
-    except (subprocess.TimeoutExpired, OSError, ValueError):
-        pass
-    return None
-
-
-def _isolated_main() -> None:
-    """``python -m kafka_cassandra_plugin_spark.streaming.slo '<json>'``:
-    measure one SLO in this fresh JVM and print one JSON line.  The
-    json's ``kind`` picks the harness: ``notification`` (default,
-    local[8] - the :func:`isolated_notification_remeasure` child) or
-    ``funnel`` (local[32], the floor claim's context of record - the
-    :func:`isolated_funnel_floor_measure` child)."""
-    import json
-    import sys
-    import tempfile
-
-    from ..session import get_spark
-
-    kwargs = json.loads(sys.argv[1]) if len(sys.argv) > 1 else {}
-    kind = kwargs.pop("kind", "notification")
-    if kind == "funnel":
-        spark = get_spark("kcp-slo-funnel-isolated", master="local[32]")
-        with tempfile.TemporaryDirectory(prefix="slo_iso_") as work:
-            out = measure_funnel_cadence(spark, work, **kwargs)
-        out.pop("phases", None)  # not JSON-round-trip material
-    else:
-        spark = get_spark(
-            "kcp-slo-isolated", master="local[8]",
-            overrides={"spark.sql.shuffle.partitions": "8"},
-        )
-        with tempfile.TemporaryDirectory(prefix="slo_iso_") as work:
-            out = measure_change_notification_latency(spark, work, **kwargs)
-    print(json.dumps(out))
-    spark.stop()
-
-
-if __name__ == "__main__":
-    _isolated_main()

@@ -32,9 +32,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from kafka_cassandra_plugin_spark.catalog import Catalog  # noqa: E402
 from kafka_cassandra_plugin_spark.operators.retrieval import Bm25Index  # noqa: E402
-from kafka_cassandra_plugin_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -44,11 +44,7 @@ def main() -> None:
     n_queries = int(sys.argv[2]) if len(sys.argv) > 2 else 4
     buckets = int(sys.argv[3]) if len(sys.argv) > 3 else 1024
     idx_path = os.path.join(repo, ".scale", "bm25_prune_probe")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "32"
-    spark = get_spark(
-        "bm25-prune-probe", master=f"local[{cpus}]",
-        overrides={"spark.sql.shuffle.partitions": str(2 * int(cpus))},
-    )
+    spark = bench.session("bm25-prune-probe")
     docs = Catalog(spark, sf_dir).documents.select("doc_id", "text")
     n_docs = docs.count()
 

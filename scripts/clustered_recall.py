@@ -20,22 +20,16 @@ import os
 import sys
 import time
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import bench  # noqa: E402
 from kafka_cassandra_plugin_spark.operators import quantization as Q  # noqa: E402
 from kafka_cassandra_plugin_spark.operators import similarity as S  # noqa: E402
 
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/sf1_clustered"
 
-spark = (
-    SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions", "32")
-    .config("spark.ui.enabled", "false")
-    .appName("clustered-recall")
-    .getOrCreate()
-)
-spark.sparkContext.setLogLevel("ERROR")
+spark = bench.session("clustered-recall")
 
 emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
 n = emb.count()

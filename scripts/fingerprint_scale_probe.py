@@ -27,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from kafka_cassandra_plugin_spark.catalog import Catalog  # noqa: E402
 from kafka_cassandra_plugin_spark.operators.fingerprint import (  # noqa: E402
     fingerprint_overlap,
@@ -35,7 +36,6 @@ from kafka_cassandra_plugin_spark.operators.fingerprint import (  # noqa: E402
 from kafka_cassandra_plugin_spark.operators.fingerprint_index import (  # noqa: E402
     FingerprintIndex,
 )
-from kafka_cassandra_plugin_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
@@ -44,11 +44,7 @@ def main() -> None:
         repo, ".scale", "sf10")
     n_probe = int(sys.argv[2]) if len(sys.argv) > 2 else 1000
     idx_path = os.path.join(repo, ".scale", "fpi_scale_probe")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "32"
-    spark = get_spark(
-        "fpi-scale-probe", master=f"local[{cpus}]",
-        overrides={"spark.sql.shuffle.partitions": str(2 * int(cpus))},
-    )
+    spark = bench.session("fpi-scale-probe")
     docs = Catalog(spark, sf_dir).documents.select("doc_id", "text")
     n_docs = docs.count()
     out: dict = {"sf_dir": sf_dir, "n_docs": n_docs, "n_probe": n_probe}

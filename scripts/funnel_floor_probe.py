@@ -10,12 +10,13 @@ feedback loop for the round-13 handle-cache floor work.
 Usage: python scripts/funnel_floor_probe.py [batch_rows ...]
 """
 import json
+import os
 import sys
 import tempfile
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_cassandra_plugin_spark.session import get_spark  # noqa: E402
+import bench  # noqa: E402
 from kafka_cassandra_plugin_spark.streaming.slo import (  # noqa: E402
     measure_funnel_cadence,
 )
@@ -23,7 +24,7 @@ from kafka_cassandra_plugin_spark.streaming.slo import (  # noqa: E402
 
 def main() -> None:
     sizes = [int(a) for a in sys.argv[1:]] or [200, 1000]
-    spark = get_spark("funnel-floor-probe", master="local[32]")
+    spark = bench.session("funnel-floor-probe")
     out = {}
     for rows in sizes:
         with tempfile.TemporaryDirectory() as d:

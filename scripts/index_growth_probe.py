@@ -59,6 +59,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from kafka_cassandra_plugin_spark.catalog import Catalog  # noqa: E402
 from kafka_cassandra_plugin_spark.operators.commonness import (  # noqa: E402
     CommonnessIndex,
@@ -69,7 +70,6 @@ from kafka_cassandra_plugin_spark.operators.fingerprint_index import (  # noqa: 
 from kafka_cassandra_plugin_spark.operators.retrieval import (  # noqa: E402
     Bm25Index,
 )
-from kafka_cassandra_plugin_spark.session import get_spark  # noqa: E402
 
 COMPACT_EVERY = 10
 PROBE_AT = {1, 10, 20, 30, 40, 50}
@@ -130,11 +130,7 @@ def main() -> None:
         "index_growth" if mode == "full" else "index_growth_tiered")
     state_path = os.path.join(work, "state.json")
     os.makedirs(work, exist_ok=True)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "32"
-    spark = get_spark(
-        "index-growth-probe", master=f"local[{cpus}]",
-        overrides={"spark.sql.shuffle.partitions": str(2 * int(cpus))},
-    )
+    spark = bench.session("index-growth-probe")
     src = Catalog(spark, sf_dir).documents.select("doc_id", "text")
     n_src = src.count()
     replicas = max(1, -(-batch_docs // n_src))

@@ -32,7 +32,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_cassandra_plugin_spark.session import get_spark  # noqa: E402
+import bench  # noqa: E402
 
 
 def main() -> None:
@@ -47,9 +47,9 @@ def main() -> None:
 
     from kafka_cassandra_plugin_spark.catalog import Catalog
 
-    spark = get_spark(
-        "kcp-skew-probe", master="local[32]",
-        overrides={
+    spark = bench.session(
+        "kcp-skew-probe",
+        **{
             # force a genuine shuffle join: the probe demonstrates the
             # skew SPLIT, which a broadcast would bypass entirely
             "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -59,7 +59,6 @@ def main() -> None:
             "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes":
                 "8m",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4m",
-            "spark.sql.shuffle.partitions": "32",
         },
     )
     cat = Catalog(spark, args.sf_dir)

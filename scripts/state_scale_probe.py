@@ -39,7 +39,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kafka_cassandra_plugin_spark.session import get_spark  # noqa: E402
+import bench  # noqa: E402
 from kafka_cassandra_plugin_spark.streaming.slo import (  # noqa: E402
     measure_change_notification_latency,
 )
@@ -51,12 +51,7 @@ TARGET_S = 1.0  # the reference envelope: listener fires <= 1 s after change
 
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else None
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "32"
-    spark = get_spark(
-        "state-scale-probe", master=f"local[{cpus}]",
-        overrides={"spark.sql.shuffle.partitions": str(2 * int(cpus))},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.session("state-scale-probe")
     cells = []
     for keys in KEY_COUNTS:
         for parts in PARTITIONS:

@@ -30,11 +30,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from kafka_cassandra_plugin_spark.catalog import Catalog  # noqa: E402
 from kafka_cassandra_plugin_spark.operators.bloom import BloomIndex  # noqa: E402
 from kafka_cassandra_plugin_spark.operators.bpe import WordHistogram  # noqa: E402
 from kafka_cassandra_plugin_spark.operators.lm import NgramLM  # noqa: E402
-from kafka_cassandra_plugin_spark.session import get_spark  # noqa: E402
 
 N_APPENDS = 20
 COMPACT_EVERY = 5
@@ -50,12 +50,7 @@ def main() -> None:
     work = os.path.join(repo, ".scale", f"tiered_stores_{mode}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "32"
-    spark = get_spark(
-        "tiered-stores-probe", master=f"local[{cpus}]",
-        overrides={"spark.sql.shuffle.partitions": str(2 * int(cpus))},
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.session("tiered-stores-probe")
     src = Catalog(spark, sf_dir).documents.select("doc_id", "text")
 
     bloom = BloomIndex.init(spark, os.path.join(work, "bloom"),

@@ -16,10 +16,9 @@ ORACLE_SF = os.environ.get("KCP_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 # Wall-clock perf gates (funnel floor, live-trigger SLO latency) measure
 # host speed, not code correctness: they have produced one host-load
 # flake per round for three rounds inside the loaded full-suite window
-# (round-15 verdict #2), and the heavyweight ones spawn fresh local[32]
-# JVMs.  They are opt-in so the DEFAULT suite is deterministic and fits
-# the driver's budget; run them explicitly with KCP_PERF_GATES=1 (or
-# `-m perfgate`).
+# (round-15 verdict #2).  They are opt-in so the DEFAULT suite is
+# deterministic and fits the driver's budget; run them explicitly with
+# KCP_PERF_GATES=1 (or `-m perfgate`).
 RUN_PERF_GATES = os.environ.get("KCP_PERF_GATES") == "1"
 
 # Redundant matrix variants (round-16, same opt-in philosophy): the

@@ -119,7 +119,8 @@ class TestLoadSf10Campaign:
         write(tmp_path, "SF10_CAMPAIGN.json", camp)
         block = bench._load_sf10_campaign(str(tmp_path))
         assert block["recorded"] is True
-        assert block["campaign_calib_s"] == 0.25
+        # the campaign's host-speed probe is not carried into the block
+        assert "campaign_calib_s" not in block
         # summary shape, not the raw tables
         assert "growth" not in block and "sf10" not in block
         assert block["sf1_total"] == 1.0
@@ -134,14 +135,14 @@ class TestLoadSf10Campaign:
     def test_scale_copy_preferred(self, tmp_path):
         (tmp_path / ".scale").mkdir()
         with open(tmp_path / ".scale" / "sf10_campaign.json", "w") as f:
-            json.dump({"calib_s": 0.1}, f)
-        write(tmp_path, "SF10_CAMPAIGN.json", {"calib_s": 0.9})
+            json.dump({"text_mode": "scale"}, f)
+        write(tmp_path, "SF10_CAMPAIGN.json", {"text_mode": "committed"})
         assert bench._load_sf10_campaign(
-            str(tmp_path))["campaign_calib_s"] == 0.1
+            str(tmp_path))["text_mode"] == "scale"
 
     def test_unreadable_falls_through(self, tmp_path):
         (tmp_path / ".scale").mkdir()
         (tmp_path / ".scale" / "sf10_campaign.json").write_text("{broken")
-        write(tmp_path, "SF10_CAMPAIGN.json", {"calib_s": 0.9})
+        write(tmp_path, "SF10_CAMPAIGN.json", {"text_mode": "committed"})
         assert bench._load_sf10_campaign(
-            str(tmp_path))["campaign_calib_s"] == 0.9
+            str(tmp_path))["text_mode"] == "committed"

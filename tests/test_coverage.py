@@ -161,6 +161,11 @@ class TestConfigLoading:
         assert props["a"] == "b=c"
         assert props["url"] == "jdbc:x:y"
 
+    def test_session_turns_off_console_progress(self, spark):
+        """Engine sessions print no ``[Stage N: ...]`` bars on stderr."""
+        assert spark.sparkContext.getConf().get(
+            "spark.ui.showConsoleProgress") == "false"
+
 
 class TestBucketedJoin:
     def test_bucketed_join_skips_shuffle(self, spark, sf_dir, tmp_path):

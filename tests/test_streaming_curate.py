@@ -1026,60 +1026,3 @@ class TestIndexExactlyOnce:
         ref_out = {r.doc_id for r in
                    accepted_dataset(spark, ref.out_path).collect()}
         assert tiered_out == ref_out
-
-
-@pytest.mark.perfgate
-class TestFunnelFloor:
-    """The batch-200 funnel-floor claim as a MECHANICAL gate (round-14
-    verdict #5): p50 8.02/8.18 s met the <=8 s target on hand-picked
-    quiet windows, but a degraded window read 17 s for the identical
-    binary - so the measurement now runs in the claim's context of
-    record (a FRESH local[32] JVM, the funnel_floor_probe shape; the
-    suite's local[8] session structurally cannot reproduce a local[32]
-    floor), the host speed rides the artifact as calib brackets
-    (slo.calib_probe, ~0.22 s on the fast 32-thread window class), the
-    gate is host-adjusted, and windows too degraded to judge (calib
-    above the ceiling - r14's 0.502-calib window read 17 s) skip WITH
-    the artifact printed instead of flaking or silently passing."""
-
-    FLOOR_P50_S = 8.0
-    REF_CALIB_S = 0.22
-    CALIB_CEILING_S = 0.6
-
-    def test_floor_holds_host_adjusted(self, spark):
-        # One fresh re-measure before failing (round-15): the calib
-        # brackets are point probes BEFORE/AFTER the batches, so a load
-        # burst DURING the batches inflates p50 without moving the gate
-        # (observed in-suite: calib 0.241 -> 0.109 across the run, p50
-        # 9.09 vs gate 8.76, then 1/1 green isolated minutes later).
-        # Same self-defense class as bench.py's isolated retries and
-        # the streaming-SLO gates (r14 verdict #3); two consecutive
-        # independent misses ARE a finding, one is weather.
-        from kafka_cassandra_plugin_spark.streaming.slo import (
-            isolated_funnel_floor_measure,
-        )
-
-        last_artifact = None
-        for attempt in (1, 2):
-            res = isolated_funnel_floor_measure(
-                n_batches=6, warmup=2, batch_rows=200, trigger_ms=500)
-            assert res is not None, "isolated funnel measurement failed"
-            artifact = {k: res[k] for k in
-                        ("p50_s", "p90_s", "max_s", "raw",
-                         "calib_before_s", "calib_after_s", "calib_s",
-                         "batch_rows")}
-            print(f"[funnel-floor attempt {attempt}] {artifact}")
-            last_artifact = artifact
-            if res["calib_s"] > self.CALIB_CEILING_S:
-                pytest.skip(
-                    f"host window too degraded to judge the floor "
-                    f"(calib {res['calib_s']} > {self.CALIB_CEILING_S}); "
-                    f"artifact: {artifact}")
-            gate = self.FLOOR_P50_S * max(
-                1.0, res["calib_s"] / self.REF_CALIB_S)
-            if res["p50_s"] <= gate:
-                return
-        assert False, (
-            f"funnel p50 {last_artifact['p50_s']} s exceeds the "
-            f"host-adjusted floor gate on two independent isolated "
-            f"measurements; last artifact: {last_artifact}")

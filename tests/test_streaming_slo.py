@@ -26,31 +26,9 @@ from __future__ import annotations
 import pytest
 
 from kafka_cassandra_plugin_spark.streaming.slo import (
-    isolated_notification_remeasure,
     measure_change_notification_latency,
     measure_lease_failover,
 )
-
-
-def _notification_with_retry(spark, work, **kwargs):
-    """Measure in-suite; if the reading is over the gate, re-measure ONCE
-    in a fresh-JVM subprocess before letting the asserts see it (the
-    bench.py isolated-retry pattern — round-14 verdict #3: 4/11 SLO
-    gates failed inside the loaded 46-min suite window and passed 11/11
-    isolated; a genuine regression still fails because it reproduces in
-    the fresh JVM)."""
-    res = measure_change_notification_latency(spark, work, **kwargs)
-    if res["p50_s"] <= 1.0 and res["max_s"] <= 2.0:
-        return res
-    iso = isolated_notification_remeasure(**kwargs)
-    print(f"[slo-retry] in-suite over gate (p50 {res['p50_s']} s, "
-          f"max {res['max_s']} s); fresh-JVM isolated re-measure -> "
-          f"{'p50 %s s, max %s s' % (iso['p50_s'], iso['max_s']) if iso else 'FAILED'}")
-    if iso is not None:
-        iso["retried_isolated"] = True
-        iso["in_suite"] = {"p50_s": res["p50_s"], "max_s": res["max_s"]}
-        return iso
-    return res
 
 
 @pytest.mark.perfgate
@@ -58,7 +36,7 @@ class TestChangeNotificationLatency:
     @pytest.fixture(scope="class")
     def result(self, spark, tmp_path_factory):
         work = str(tmp_path_factory.mktemp("slo_notif"))
-        return _notification_with_retry(
+        return measure_change_notification_latency(
             spark, work, n_events=8, warmup=2, trigger_ms=500
         )
 
@@ -86,7 +64,7 @@ class TestChangeNotificationLatencyLargeState:
     @pytest.fixture(scope="class")
     def result(self, spark, tmp_path_factory):
         work = str(tmp_path_factory.mktemp("slo_notif_big"))
-        return _notification_with_retry(
+        return measure_change_notification_latency(
             spark, work, n_events=6, warmup=2, trigger_ms=500,
             preload_keys=20_000,
         )
@@ -105,10 +83,12 @@ class TestFunnelCadence:
     dedup + corpus-index probe) inside a real StreamingQuery at the
     reference's 500 ms trigger.  The funnel does NOT sustain 500 ms -
     its per-batch floor is index/model load + the ~15-job gate chain -
-    so the gate here is honesty-shaped: every batch completes, the
-    stats are coherent, and the artifact says explicitly whether the
-    trigger is sustained instead of leaving the claim unmeasured
-    (measured steady state at 200-row batches: see BASELINE.md)."""
+    so the artifact says explicitly whether the trigger is sustained,
+    and the batch-200 floor claim (p50 <= 8 s, BASELINE.md) is gated on
+    the same measurement, taken once in the suite's session at the
+    floor's parameters (scripts/funnel_floor_probe.py shape)."""
+
+    FLOOR_P50_S = 8.0
 
     @pytest.fixture(scope="class")
     def result(self, spark, tmp_path_factory):
@@ -118,13 +98,13 @@ class TestFunnelCadence:
 
         work = str(tmp_path_factory.mktemp("slo_funnel"))
         return measure_funnel_cadence(
-            spark, work, n_batches=4, warmup=1, batch_rows=200,
+            spark, work, n_batches=6, warmup=2, batch_rows=200,
             trigger_ms=500,
         )
 
     def test_all_batches_complete(self, result):
-        assert result["n"] == 4
-        assert len(result["raw"]) == 5  # warmup kept in raw
+        assert result["n"] == 6
+        assert len(result["raw"]) == 8  # warmup kept in raw
 
     def test_stats_coherent_and_verdict_recorded(self, result):
         assert 0 < result["p50_s"] <= result["max_s"]
@@ -141,6 +121,9 @@ class TestFunnelCadence:
             "ppl_out_of_band", "contaminated", "seen_before",
             "exact_dup", "near_dup_batch", "near_dup_corpus",
         }
+
+    def test_floor_p50_within_target(self, result):
+        assert result["p50_s"] <= self.FLOOR_P50_S, result
 
 
 class TestLeaseFailover:
