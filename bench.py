@@ -433,6 +433,7 @@ FIT_ROWS = [
     ("bm25_topk", "bm25_topk[index_build]"),
     ("quality_classifier", "quality_classifier[fit]"),
     ("lm_perplexity", "lm_perplexity[fit]"),
+    ("ccnet_buckets", "ccnet_buckets[fit]"),
     ("langid", "langid[fit]"),
     ("dedup_semantic", "dedup_semantic[index_build]"),
     ("bloom_filter_new", "bloom_filter_new[build]"),
@@ -967,8 +968,8 @@ def _depth_ops(sf_dir):
 
     # D30 row (round 9): the CCNet bucketing SCALE path - perplexity
     # scoring + the broadcast cutoff application (cutoffs precomputed
-    # once into _state, like every fit-once/score-many row; the LM is
-    # shared with lm_perplexity's cached fit).
+    # once into _state by the ccnet_buckets[fit] row; the LM is shared
+    # with lm_perplexity's cached fit).
     def ccnet_buckets(spark):
         from kafka_cassandra_plugin_spark.operators.lm import (
             apply_ppl_cutoffs,

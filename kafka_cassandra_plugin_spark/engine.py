@@ -30,7 +30,6 @@ from .operators import changes as _changes
 from .operators import contamination as _contamination
 from .operators import dedup as _dedup
 from .operators import export as _export
-from .operators import graph as _graph
 from .operators import kv as _kv
 from .operators import lm as _lm
 from .operators import membership as _membership
@@ -163,7 +162,7 @@ class Engine:
     # -- round-5 additions (SURVEY §2.5 D12-D16) ------------------------------
     pii_profile = staticmethod(_pii.pii_profile)
     redact_pii = staticmethod(_pii.redact_pii)
-    component_labels_star = staticmethod(_graph.component_labels_star)
+    component_labels = staticmethod(_dedup.component_labels)
     take_per_group = staticmethod(_sampling.take_per_group)
     plan_mixture = staticmethod(_sampling.plan_mixture)
     mix_to_budget = staticmethod(_sampling.mix_to_budget)

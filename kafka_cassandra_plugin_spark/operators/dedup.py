@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from . import ensure_min_parallelism
+from .graph import connected_components_star
 from .text import tokens
 
 
@@ -883,130 +884,19 @@ def embedding_cosine_pairs(vectors: DataFrame, threshold: float = 0.99,
 # Pairs -> survivors: the last step of every near-dup pipeline.
 # --------------------------------------------------------------------------
 
-def component_labels(nodes: DataFrame, pairs: DataFrame,
-                     id_col: str = "doc_id",
-                     id_a: str = "id_a", id_b: str = "id_b",
-                     max_rounds: int = 20) -> DataFrame:
-    """Connected-component label of every node in ``nodes`` under the
-    ``pairs`` edge set: iterative min-label propagation; the label is the
-    component's minimum node id (= the survivor under the keep='min'
-    convention).  Returns (node, label).
-
-    Scale shape: each round is one equi-join (edges x labels) + one
-    min-aggregation - all shuffles on the node id, no driver-side graph.
-    The driver only runs the (bounded) convergence loop and a per-round
-    emptiness probe, like any iterative fixpoint on Spark (KMeans, PIC);
-    ``localCheckpoint`` truncates lineage so plans stay flat across
-    rounds.
-    """
-    edges = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    edges = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct().localCheckpoint()
-    labels = (
-        nodes.select(F.col(id_col).alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_rounds):
-        nbr = (
-            edges.join(labels, edges["v"] == labels["node"])
-            .groupBy("u")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr, labels["node"] == nbr["u"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_min", F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+# Edge-list size under which component_labels resolves components on
+# the driver instead of running the distributed star rounds: 100k pairs
+# is a few MB of ids - trivially collectable - while the star rounds
+# cost >= 4 fixed jobs even for one pair.
+MAX_DRIVER_PAIRS = 100_000
 
 
-def component_labels_auto(nodes: DataFrame, pairs: DataFrame,
-                          id_col: str = "doc_id",
-                          id_a: str = "id_a", id_b: str = "id_b",
-                          max_rounds: int = 20,
-                          hint_broadcast_result: bool = False) -> DataFrame:
-    """:func:`component_labels` with the :func:`survivors_from_pairs`
-    driver fast path (round-15 optimization): a capped collect probes
-    the pair list, and when it fits under :data:`MAX_DRIVER_PAIRS` the
-    labels resolve on the driver (:func:`union_find_labels`) and return
-    as ONE broadcast-joined frame - identical (node, label) rows, none
-    of the propagation loop's fixed cost (>= 2 Spark jobs per round:
-    the label checkpoint + the convergence probe; the
-    dedup_ngram_jaccard row measured 44 jobs -> 19 under this change
-    with bit-identical output).  Pair sets above the cap take the
-    distributed loop unchanged, so the operator stays 100 TB-safe.
-
-    ``pairs`` should be materialized (localCheckpoint) by the caller -
-    the capped probe and any fallback replay its lineage otherwise.
-
-    ``hint_broadcast_result``: set True ONLY when ``nodes`` is derived
-    from ``pairs`` (so the result is pair-bounded).  The hint is applied
-    on the driver fast path alone - there the pair cap bounds the result
-    at <= 2 x MAX_DRIVER_PAIRS rows, small enough that downstream joins
-    against the big pair/doc side should broadcast it.  The distributed
-    fallback never hints: above the cap the label table is unbounded.
-
-    A probe SHORT-CIRCUIT from materialized-plan statistics (skip the
-    capped collect when checkpointed pair blocks are "provably" over
-    the cap) was implemented and REVERTED in round 16: localCheckpoint
-    block sizes are SizeEstimator object-graph walks that count shared
-    backing buffers once per row - the 1648-row sf0.1 pair table
-    reported 74.2 GB (45 MB/row) under the self-join lineage and
-    wrongly demoted the declared query to the distributed loop (21 ->
-    44 jobs).  No cheap trustworthy row bound exists for an RDD-backed
-    frame; the probe stays, and at fallback scale its one job +
-    <=100k-row transfer is <5% of the loop it precedes."""
-    from pyspark.sql.types import StructField, StructType
-
-    head = (
-        pairs.select(F.col(id_a), F.col(id_b))
-        .limit(MAX_DRIVER_PAIRS + 1)
-        .collect()
-    )
-    if len(head) > MAX_DRIVER_PAIRS:
-        return component_labels(nodes, pairs, id_col, id_a, id_b,
-                                max_rounds)
-    lab = union_find_labels((r[0], r[1]) for r in head)
-    id_type = pairs.schema[id_a].dataType
-    lab_df = pairs.sparkSession.createDataFrame(
-        sorted(lab.items()),
-        StructType([StructField("node", id_type),
-                    StructField("label", id_type)]),
-    )
-    # isolated nodes (no edge) label themselves, like the loop's round 0
-    out = (
-        nodes.select(F.col(id_col).alias("node"))
-        .distinct()
-        .join(F.broadcast(lab_df), "node", "left")
-        .select("node",
-                F.coalesce("label", F.col("node")).alias("label"))
-    )
-    # hint only here, where the pair cap proves the bound (docstring)
-    return F.broadcast(out) if hint_broadcast_result else out
-
-
-def _union_find_parent(edges) -> dict:
-    """Union-find over an edge iterable, union-by-min: returns the
-    ``parent`` map with every root equal to its component's minimum id.
-    Shared by :func:`union_find_drops` and :func:`union_find_labels`."""
+def union_find_labels(edges) -> dict:
+    """Driver-side component LABELS for a SMALL edge list: {node ->
+    component minimum id} for every node of a non-self-loop edge (the
+    same answer :func:`.graph.connected_components_star` converges to).
+    Union-find with union-by-min and path compression, pure python,
+    O(E α(E)).  ``edges``: iterable of (u, v)."""
     parent: dict = {}
 
     def find(x):
@@ -1018,10 +908,10 @@ def _union_find_parent(edges) -> dict:
         return r
 
     for u, v in edges:
-        if u not in parent:
-            parent[u] = u
-        if v not in parent:
-            parent[v] = v
+        if u == v:
+            continue  # a self-loop is no edge, as in the star's _canon
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
         ru, rv = find(u), find(v)
         if ru != rv:
             # union by min so every root IS its component's minimum
@@ -1033,94 +923,72 @@ def _union_find_parent(edges) -> dict:
     return parent
 
 
-def union_find_drops(edges) -> set:
-    """Driver-side survivor resolution for a SMALL edge list: connected
-    components via union-find, returning the ids to DROP (every
-    component member except its minimum - the keep='min' convention).
-    Pure python, O(E α(E)); the fast path for micro-batch pair sets
-    where the distributed label-propagation loop's per-round job cost
-    (not its row work) dominates.  ``edges``: iterable of (u, v)."""
-    parent = _union_find_parent(edges)
-    return {x for x, p in parent.items() if p != x}
+def component_labels(pairs: DataFrame, id_a: str = "id_a",
+                     id_b: str = "id_b") -> DataFrame:
+    """Connected-component label of every node that appears in a
+    ``pairs`` edge: returns (node, label), label = the component's
+    minimum node id (= the survivor under the keep='min' convention).
+    Nodes in no edge get no row - they are their own singletons.
 
+    One capped collect picks the path.  A pair set of at most
+    :data:`MAX_DRIVER_PAIRS` rows resolves on the DRIVER
+    (:func:`union_find_labels`) and comes back as a broadcast-hinted
+    literal frame: the cap bounds it at 2 x MAX_DRIVER_PAIRS rows, and
+    there are none of the distributed rounds' fixed jobs.  Above the cap
+    the labels come from :func:`.graph.connected_components_star` -
+    diameter-independent round count, no driver-side graph - with no
+    hint, since that table is unbounded.
 
-def union_find_labels(edges) -> dict:
-    """Driver-side component LABELS for a SMALL edge list: {node ->
-    component minimum id} for every node touched by an edge - the same
-    answer :func:`component_labels` converges to, without the
-    distributed loop.  ``edges``: iterable of (u, v)."""
-    return _union_find_parent(edges)
+    ``pairs`` should be materialized (localCheckpoint) by the caller
+    when its plan is expensive: the probe and the star rounds both
+    replay its lineage otherwise.
 
+    A probe SHORT-CIRCUIT from materialized-plan statistics was tried
+    and reverted: localCheckpoint block sizes are SizeEstimator walks
+    that count shared backing buffers once per row (the 1648-row sf0.1
+    pair table reported 74.2 GB) and wrongly demoted a small pair set
+    to the distributed path.  No cheap trustworthy row bound exists for
+    an RDD-backed frame; the probe stays."""
+    from pyspark.sql.types import StructField, StructType
 
-# Edge-list size under which survivors_from_pairs resolves components
-# on the driver instead of spawning the iterative distributed labeler:
-# 100k pairs is a few MB of ids - trivially collectable - while the
-# distributed loop costs >= 4 fixed jobs even for one pair.  A batch
-# exceeding the cap falls back to the scale path automatically.
-MAX_DRIVER_PAIRS = 100_000
+    head = pairs.select(id_a, id_b).limit(MAX_DRIVER_PAIRS + 1).collect()
+    if len(head) > MAX_DRIVER_PAIRS:
+        return connected_components_star(pairs, id_a, id_b)
+    lab = union_find_labels(head)
+    id_type = pairs.schema[id_a].dataType
+    labels = pairs.sparkSession.createDataFrame(
+        sorted(lab.items()),
+        StructType([StructField("node", id_type),
+                    StructField("label", id_type)]),
+    )
+    # no edge: limit(0) plans as an empty LocalRelation, which the
+    # optimizer folds out of every join instead of broadcasting it
+    return F.broadcast(labels if lab else labels.limit(0))
 
 
 def survivors_from_pairs(df: DataFrame, pairs: DataFrame,
                          id_col: str = "doc_id",
-                         id_a: str = "id_a", id_b: str = "id_b",
-                         max_rounds: int = 20,
-                         labeler: str = "propagation") -> DataFrame:
-    """Resolve near-duplicate PAIRS into the rows to KEEP: connected
-    components of the pair graph (:func:`component_labels`), keeping
-    each component's minimum-id member (deterministic survivor,
-    matching :func:`exact_dedup`'s keep='min' convention).
+                         id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
+    """Resolve near-duplicate PAIRS into the rows to KEEP: every
+    connected component of the pair graph (:func:`component_labels`)
+    keeps its minimum-id member (deterministic survivor, matching
+    :func:`exact_dedup`'s keep='min' convention); ``df`` loses the
+    labelled nodes whose label is not themselves.
 
     Near-dup relations are not transitive, but dedup treats them so
     (A~B, B~C => one survivor for {A,B,C}); components are the standard
-    closure.  Label propagation converges in O(graph diameter) rounds -
-    near-dup clusters are shallow (dup chains, not paths), so a handful
-    of rounds suffices; ``max_rounds`` bounds the worst case.
-
-    ``labeler="star"`` switches to the alternating large-star/small-star
-    algorithm (:func:`.graph.component_labels_star`) — same shuffle
-    shape per round but diameter-INDEPENDENT round count (O(log² n)),
-    the right choice when the pair graph may contain long chains
-    (mirror-of-mirror crawls, chained edits) rather than shallow
-    cliques.
-
-    Fast path (round-13 floor work): when the pair set is small
-    (<= :data:`MAX_DRIVER_PAIRS`, checked with a capped collect), the
-    components resolve on the DRIVER via :func:`union_find_drops` and
-    the result is one broadcast anti-join - identical survivors, and
-    the distributed labeler's per-round fixed job cost (>= 4 jobs even
-    for one pair) disappears from micro-batch pipelines.  Pair sets
-    above the cap take the distributed path unchanged, so the operator
-    stays 100 TB-safe.
+    closure, exact at any graph depth on both of component_labels'
+    paths.  On the driver path the drop set is a broadcast literal, so
+    the anti-join never shuffles ``df``.
     """
     # one eager materialization of the pair DAG, shared by the capped
-    # probe AND (on fallback) the distributed labeler - the LSH
-    # machinery upstream never executes twice
-    probe = pairs.select(
-        F.col(id_a).alias(id_a), F.col(id_b).alias(id_b)
-    ).localCheckpoint()
-    head = probe.limit(MAX_DRIVER_PAIRS + 1).collect()
-    if len(head) <= MAX_DRIVER_PAIRS:
-        drops = union_find_drops((r[id_a], r[id_b]) for r in head)
-        if not drops:
-            return df
-        spark = df.sparkSession
-        drop_df = spark.createDataFrame(
-            [(d,) for d in sorted(drops)],
-            df.select(F.col(id_col)).schema,
-        )
-        return df.join(F.broadcast(drop_df), id_col, "left_anti")
-    if labeler == "star":
-        from .graph import component_labels_star
-
-        labels = component_labels_star(
-            df, probe, id_col, id_a, id_b, max_rounds=max(max_rounds, 30)
-        )
-    else:
-        labels = component_labels(df, probe, id_col, id_a, id_b, max_rounds)
-    keep = labels.filter(F.col("node") == F.col("label")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(keep, id_col, "left_semi")
+    # probe AND (over the cap) the star rounds - the LSH machinery
+    # upstream never executes twice
+    pairs = pairs.select(id_a, id_b).localCheckpoint()
+    drops = component_labels(pairs, id_a, id_b).filter(
+        F.col("node") != F.col("label")
+    ).select(F.col("node").alias(id_col))
+    return df.join(drops, id_col, "left_anti")
 
 
 def semantic_dedup_pairs(vectors: DataFrame, threshold: float = 0.95,

@@ -2,23 +2,21 @@
 (SURVEY §2.5 D13).
 
 Every near-dup pipeline ends with "resolve the pair graph into
-components and keep one survivor per component".  The engine's
-:func:`.dedup.component_labels` does that by iterative min-label
-propagation — one equi-join + min-agg per round, converging in
-O(graph diameter) rounds.  Near-dup clusters are usually shallow, so
-that is the right default; but a pathological corpus (chained edits,
-crawl mirrors re-mirrored, boilerplate drift) can produce long PATHS,
-and at 100 TB a 10,000-edge chain means 10,000 shuffle rounds — the
-driver loop, not the data, becomes the bottleneck.
+components and keep one survivor per component".  Pair sets under
+:data:`.dedup.MAX_DRIVER_PAIRS` resolve on the driver
+(:func:`.dedup.component_labels`); above that cap the labels come from
+here.  A pathological corpus (chained edits, crawl mirrors re-mirrored,
+boilerplate drift) can produce long PATHS in the pair graph, so the
+distributed labeler must not need one round per hop: at 100 TB a
+10,000-edge chain would mean 10,000 shuffle rounds.
 
-This module implements the published fix: the alternating
-**large-star / small-star** algorithm (Kiveris, Lattanzi, Mirrokni,
+This module implements the published algorithm: the alternating
+**large-star / small-star** rounds (Kiveris, Lattanzi, Mirrokni,
 Rastogi, Vassilvitskii, "Connected Components in MapReduce and
-Beyond", SoCC 2014), which contracts components toward their minimum
+Beyond", SoCC 2014), which contract components toward their minimum
 node in **O(log² n) rounds regardless of diameter** (observed: ~2·log₂
 of the longest path).  Each round is two map+groupBy passes over the
-edge list — the same shuffle shape as one propagation round — so the
-win is purely in round count.
+edge list.
 
     large-star: every node connects its LARGER neighbors to the
         minimum of its closed neighborhood;
@@ -28,12 +26,11 @@ win is purely in round count.
 Both steps preserve connectivity and never create new components; the
 unique fixed point is each component collapsed to a star centered at
 its minimum id.  Convergence is detected by an edge-set checksum
-(count + sum of xxhash64), one tiny aggregate per round.
+(count + xor of xxhash64), one tiny aggregate per round.
 
 Scale shape: state is only the edge list, re-partitioned by center
 node each half-round; no driver-side graph, no vertex program
-framework.  ``localCheckpoint`` truncates lineage per round exactly
-like the propagation loop.
+framework.  ``localCheckpoint`` truncates lineage every round.
 
 Reference provenance: the reference plugin (Cassandra KV/lease layer)
 has no graph machinery; this is LLM-pipeline closure, independent
@@ -44,6 +41,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Round budget of connected_components_star.  Rounds grow with ~2·log₂
+# of the longest path, so exhausting 30 means a component graph deeper
+# than any physical corpus can produce (2³⁰-chain) - a bug, not a
+# tuning problem.
+MAX_STAR_ROUNDS = 30
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -105,29 +108,22 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 
 def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 30,
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
-    """Component label (= component minimum id) for every node that
-    appears in ``pairs``: returns (node, label).  Nodes absent from the
-    edge list are their own singleton components — join the result back
-    to the node set with a coalesce, as :func:`component_labels_star`
-    does.
+    """Component label (= component minimum id) for every node of a
+    non-self-loop edge in ``pairs``: returns (node, label).  Nodes in no
+    edge get no row - they are their own singleton components.
 
     Rounds are large-star + small-star pairs; convergence (edge-set
     fixed point = per-component stars) typically lands in
     ~log₂(longest path) rounds.  Raises ``RuntimeError`` if
-    ``max_rounds`` is exhausted — with the default 30 that means a
-    component graph deeper than any physical corpus can produce
-    (2³⁰ -chain), i.e. a bug, not a tuning problem.
+    :data:`MAX_STAR_ROUNDS` is exhausted.
     """
     edges = _canon(
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
     ).localCheckpoint()
     prev = _checksum(edges)
-    for _ in range(max_rounds):
+    for _ in range(MAX_STAR_ROUNDS):
         edges = _small_star(_large_star(edges)).localCheckpoint()
         cur = _checksum(edges)
         if cur == prev:
@@ -135,8 +131,8 @@ def connected_components_star(
         prev = cur
     else:
         raise RuntimeError(
-            f"star connected-components did not converge in {max_rounds} "
-            "rounds - edge set still changing"
+            f"star connected-components did not converge in "
+            f"{MAX_STAR_ROUNDS} rounds - edge set still changing"
         )
     # fixed point: every component is a star (min, v) with min < v
     members = edges.select(F.col("v").alias("node"), F.col("u").alias("label"))
@@ -144,24 +140,3 @@ def connected_components_star(
         "label", F.col("node")
     )
     return members.unionByName(centers)
-
-
-def component_labels_star(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 30,
-) -> DataFrame:
-    """Drop-in equivalent of :func:`.dedup.component_labels` (same
-    (node, label) contract, label = component min) built on the
-    star algorithm: diameter-independent round count for deep pair
-    graphs."""
-    labels = connected_components_star(pairs, id_a, id_b, max_rounds)
-    return (
-        nodes.select(F.col(id_col).alias("node"))
-        .distinct()
-        .join(labels, "node", "left")
-        .select("node", F.coalesce("label", F.col("node")).alias("label"))
-    )

@@ -302,7 +302,7 @@ def leader_timeline_chunked(heartbeats: DataFrame, ttl_seconds: float,
     state CARRIED FORWARD from the previous slice via a cogrouped
     applyInPandas - so a task ever holds only ``rows / n_chunks`` of the
     hottest resource.  The driver runs only the bounded slice loop
-    (n_chunks iterations, like survivors_from_pairs' round loop); each
+    (n_chunks iterations, like the star components' round loop); each
     slice's output is localCheckpoint'd, which both materializes the
     diamond (events + carry read the same fold once) and truncates
     lineage so the plan does not grow with slices.

@@ -91,7 +91,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import minhash_lsh_dedup_pairs, survivors_from_pairs
+from .dedup import (
+    component_labels, exploded_shingles, minhash_lsh_dedup_pairs,
+)
 from .dedup_index import MinHashIndex
 from .sampling import hash_split
 from .text import (
@@ -569,7 +571,6 @@ def curate_annotated(
     # up to three times per micro-batch, and at micro-batch scale the
     # repeated fixed job cost was a measured term of the CurationSink
     # floor
-    from .dedup import MAX_DRIVER_PAIRS, exploded_shingles, union_find_drops
 
     # lazy checkpoint + count (round-14): the count is the action that
     # materializes the substrate, so ONE job both caches the exploded
@@ -624,24 +625,21 @@ def curate_annotated(
         corpus_fut = pool.submit(_probe)
 
     # stage 4: intra-batch near-dup clusters keep their min-id member.
-    # Survivor resolution fast path (mirrors survivors_from_pairs):
-    # micro-batch pair sets resolve on the driver via union-find, so
-    # near_rej is a LITERAL id set and kept a broadcast anti-join -
-    # no distributed label-propagation rounds, no kept checkpoint.
-    # Pair sets above the cap fall back to the distributed labeler.
+    # component_labels picks the survivor path: micro-batch pair sets
+    # resolve on the driver, so the drop set is a broadcast-hinted
+    # LITERAL and both joins below are broadcast - no distributed rounds,
+    # no kept checkpoint.  Pair sets above its cap get the star labels,
+    # unhinted, and the same joins plan as shuffles.
     pairs = minhash_lsh_dedup_pairs(
         surv, text_col, id_col, threshold=near_dup_threshold,
         exploded=exploded_surv, **mh_params
     ).select("id_a", "id_b")
-    id_schema = surv.select(F.col(id_col)).schema
     spark = surv.sparkSession
-    # collect the capped head directly - no checkpoint first: the fast
-    # path consumes pairs exactly once (this collect), so a checkpoint
-    # would materialize the band-join + verify plan twice per
-    # micro-batch for nothing.  Only the distributed fallback (which
-    # reuses pairs across label-propagation rounds) checkpoints.
+    # no checkpoint first: under the cap pairs are consumed exactly once
+    # (the capped collect), so a checkpoint would materialize the
+    # band-join + verify plan twice per micro-batch for nothing
     try:
-        head = pairs.limit(MAX_DRIVER_PAIRS + 1).collect()
+        labels = component_labels(pairs)
     except Exception:
         if pool is not None:
             # cancel-then-join so the failed batch leaves no orphaned
@@ -653,38 +651,12 @@ def curate_annotated(
             pool.shutdown(wait=True)
         raise
     _t = _mark("pairs_s", _t)
-    if len(head) <= MAX_DRIVER_PAIRS:
-        drops = sorted(union_find_drops((r.id_a, r.id_b) for r in head))
-        drop_df = spark.createDataFrame([(d,) for d in drops], id_schema)
-        # (no `kept` frame needed on this path since round-14: the
-        # corpus probe reads surv, and the substrate out-param carries
-        # the kept-id filter itself)
-        kept_ids = drop_df.withColumnsRenamed({id_col: "id"})
-        exploded_kept = (
-            exploded_surv.join(F.broadcast(kept_ids), "id", "left_anti")
-            if drops else exploded_surv
-        )
-        near_rej = spark.createDataFrame(
-            [(d, "near_dup_batch") for d in drops],
-            surv.select(
-                F.col(id_col).alias("__rid"),
-                F.lit("x").alias("__reason"),
-            ).schema,
-        )
-    else:
-        # above the driver cap: checkpoint pairs (the labeler iterates
-        # over them), then resolve survivors distributed
-        pairs = pairs.localCheckpoint()
-        kept = survivors_from_pairs(
-            surv, pairs, id_col=id_col
-        ).localCheckpoint()
-        exploded_kept = exploded_surv.join(
-            kept.select(F.col(id_col).alias("id")), "id", "left_semi"
-        )
-        near_rej = surv.join(
-            kept.select(id_col), id_col, "left_anti"
-        ).select(F.col(id_col).alias("__rid"),
-                 F.lit("near_dup_batch").alias("__reason"))
+    drops = labels.filter(F.col("node") != F.col("label"))
+    exploded_kept = exploded_surv.join(
+        drops.select(F.col("node").alias("id")), "id", "left_anti"
+    )
+    near_rej = drops.select(F.col("node").alias("__rid"),
+                            F.lit("near_dup_batch").alias("__reason"))
 
     # substrate out-param (round-13 floor work): expose the shared
     # shingle frame so a sink caller can pass it to
@@ -710,7 +682,9 @@ def curate_annotated(
         finally:
             pool.shutdown(wait=False)
 
-    nb = F.broadcast(near_rej.withColumnsRenamed({"__reason": "__nb"}))
+    # near_rej carries component_labels' broadcast hint on the driver
+    # path only: above the pair cap it is unbounded
+    nb = near_rej.withColumnsRenamed({"__reason": "__nb"})
     out = ann.join(nb, ann[id_col] == nb["__rid"], "left").drop("__rid")
     reason_cols = [F.col("__nb")]
     if corpus_rej is not None:

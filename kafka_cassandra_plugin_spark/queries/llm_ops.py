@@ -332,8 +332,9 @@ def dedup_exact(spark, sf_dir):
     "join - at 100 TB the cap is what bounds join fanout; jaccard "
     "computed over the capped sets, threshold 0.7. Corpus has planted "
     "near-dups (first-token-dropped copies of every 4th doc). Each pair "
-    "carries its connected-component survivor (component_labels "
-    "min-label propagation; oracle = six unrolled O(E) propagation "
+    "carries its connected-component survivor (component_labels: "
+    "driver union-find under the pair cap, star rounds above it; "
+    "oracle = six unrolled O(E) min-label propagation "
     "rounds, NOT a recursive reachability CTE whose path enumeration "
     "is quadratic in component size) - the pairs->survivors step of "
     "every near-dup pipeline, oracle-checked on components up to size "
@@ -353,18 +354,10 @@ def dedup_ngram_jaccard(spark, sf_dir):
     pairs = D.ngram_jaccard_pairs(
         corpus, "text", "doc_id", n=3, threshold=0.7, max_shingle_freq=20
     ).localCheckpoint()  # pairs feed both the output and the closure
-    nodes = pairs.select(F.col("id_a").alias("doc_id")).unionByName(
-        pairs.select(F.col("id_b").alias("doc_id"))
-    )
-    # round-15: the driver union-find fast path (the survivors_from_pairs
-    # cap pattern) - identical labels, 44 -> 19 Spark jobs at sf0.1;
-    # pair sets over MAX_DRIVER_PAIRS fall back to the distributed loop
-    # hint_broadcast_result is sound here: nodes is pairs-derived, so on
-    # the driver fast path labels is capped at 2 x MAX_DRIVER_PAIRS rows
-    # and the pairs-side join below should not shuffle; the distributed
-    # fallback (pairs over the cap) stays unhinted inside auto.
-    labels = D.component_labels_auto(nodes, pairs, id_col="doc_id",
-                                     hint_broadcast_result=True)
+    # every id_a is in a pair, so the pair-node labels cover the join;
+    # under MAX_DRIVER_PAIRS they are a broadcast literal and the join
+    # below never shuffles the pairs
+    labels = D.component_labels(pairs)
     return (
         pairs.join(labels, pairs["id_a"] == labels["node"])
         .select("id_a", "id_b", "jaccard", F.col("label").alias("survivor"))

@@ -171,12 +171,14 @@ TIER_D = {
             "zero-Exchange plan; funnel budget gate; DuckDB oracle at "
             "sf0.01; benched as extra_queries['pii_redaction'] "
             "(tests/test_pii.py)"),
-    "D13": ("star connected components (connected_components_star/"
-            "component_labels_star; survivors_from_pairs(labeler='star'))",
-            "operators/graph.py",
-            "union-find oracle agreement; propagation equivalence; 400-edge "
-            "chain beyond the propagation budget; non-convergence raises; "
-            "survivor-set equality (tests/test_graph.py)"),
+    "D13": ("connected components (component_labels: driver union-find "
+            "under MAX_DRIVER_PAIRS, connected_components_star above it; "
+            "survivors_from_pairs)",
+            "operators/graph.py, dedup.py",
+            "union-find oracle agreement on both paths; 400-edge chain; "
+            "shuffled 60-node chain survivors over the cap; non-convergence "
+            "raises; funnel verdicts equal over the cap "
+            "(tests/test_graph.py, test_llm_ops.py, test_pipeline.py)"),
     "D14": ("exact per-stratum selection (take_per_group)",
             "operators/sampling.py",
             "exact min(k, n) counts; membership+rank partition-invariant; "

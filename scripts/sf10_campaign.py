@@ -73,10 +73,10 @@ ROW_VERDICTS = {
 }
 
 
-def run_rows(spark, builders, names, budget_s, start, label):
-    """Wall seconds per row (None when it raised) through
-    bench.measure_row; rows reached after ``budget_s`` are skipped by
-    name."""
+def run_rows(spark, runs, names, budget_s, start, label):
+    """Wall seconds per row (None when it raised) of ``runs[name]()``
+    through bench.measure_row; rows reached after ``budget_s`` are
+    skipped by name."""
     times, skipped = {}, []
     for name in names:
         if time.perf_counter() - start > budget_s:
@@ -84,8 +84,7 @@ def run_rows(spark, builders, names, budget_s, start, label):
             continue
         try:
             times[name] = bench.measure_row(
-                spark, f"{label}:{name}",
-                lambda: bench.materialize(builders[name](spark)))["wall_s"]
+                spark, f"{label}:{name}", runs[name])["wall_s"]
             print(f"  [{label}] {name}: {times[name]} s", flush=True)
         except Exception as exc:  # record, don't die mid-campaign
             times[name] = None
@@ -165,8 +164,8 @@ def main() -> None:
     start = time.perf_counter()
 
     def declared(sf_dir):
-        return {n: (lambda s, q=registry[n]: q.build(s, sf_dir))
-                for n in names}
+        return {n: (lambda q=registry[n]: bench.materialize(
+            q.build(spark, sf_dir))) for n in names}
 
     sf1_times, sf1_skipped = run_rows(
         spark, declared(args.sf1), names, args.budget, start, "sf1")
@@ -187,10 +186,24 @@ def main() -> None:
                **bench._depth_ops(args.sf10)}
         xnames = (sorted(x1) if args.extras.strip() == "all"
                   else [n for n in extras_req if n in x1])
-        ex1, ex1_skip = run_rows(
-            spark, x1, xnames, args.budget, start, "extras-sf1")
+        # each scale's one-off fits run first as their own rows
+        # (bench.FIT_ROWS), so the extras rows and their growth ratios
+        # are the recurring cost only
+        fits = [(op, row) for op, row in bench.FIT_ROWS if op in xnames]
+
+        def extras(ops):
+            runs = {n: (lambda fn=fn: bench.materialize(fn(spark)))
+                    for n, fn in ops.items()}
+            runs.update({row: (lambda op=op: ops[op](spark))
+                         for op, row in fits})
+            return runs
+
+        fit_rows = [row for _, row in fits]
+        ex1, ex1_skip = run_rows(spark, extras(x1), fit_rows + xnames,
+                                 args.budget, start, "extras-sf1")
         ex10, ex10_skip = run_rows(
-            spark, x10, cheapest_first(xnames, ex1), args.budget, start,
+            spark, extras(x10),
+            fit_rows + cheapest_first(xnames, ex1), args.budget, start,
             "extras-sf10")
         exg, exf = growth_table(ex1, ex10, xnames)
         extras_out = {

@@ -1,8 +1,9 @@
-"""Star connected components (SURVEY §2.5 D13): agreement with a
-driver-side union-find oracle and with the propagation labeler on
-random graphs, correct handling of cliques/chains/isolates, the
-diameter-independence claim (a chain far deeper than the propagation
-round budget labels correctly), and the survivors wiring."""
+"""Connected components (SURVEY §2.5 D13): the star rounds and
+``component_labels`` (driver union-find under the pair cap, star rounds
+above it) against a driver-side union-find oracle on random graphs;
+correct handling of cliques/chains/isolates, the diameter-independence
+claim (a chain far deeper than a one-hop-per-round labeler's budget
+labels correctly), and the survivors wiring over the cap."""
 
 from __future__ import annotations
 
@@ -32,6 +33,12 @@ def _union_find(n_nodes, edges):
     return {x: find(x) for x in range(n_nodes)}
 
 
+def _touched(want, edges):
+    """The oracle restricted to the nodes of non-self-loop edges - the
+    rows the labelers return."""
+    return {x: want[x] for e in edges if e[0] != e[1] for x in e}
+
+
 def _pairs(spark, edges):
     return spark.createDataFrame(
         [(int(a), int(b)) for a, b in edges], "id_a: long, id_b: long"
@@ -46,119 +53,113 @@ def _labels(df):
     return {r.node: r.label for r in df.collect()}
 
 
+def _random_edges(seed, n, m):
+    rng = random.Random(seed)
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+    return [e for e in edges if e[0] != e[1]]
+
+
 class TestStarLabels:
     def test_two_cliques_and_an_isolate(self, spark):
         edges = [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12)]
-        got = _labels(G.component_labels_star(_nodes(spark, 14), _pairs(spark, edges)))
+        got = _labels(G.connected_components_star(_pairs(spark, edges)))
         assert got[0] == got[1] == got[2] == 0
         assert got[10] == got[11] == got[12] == 10
-        assert got[13] == 13  # isolate labels itself
+        assert 13 not in got  # a node in no pair gets no row
 
     def test_empty_edge_set_all_singletons(self, spark):
-        got = _labels(G.component_labels_star(_nodes(spark, 5),
-                                              _pairs(spark, [])))
-        assert got == {i: i for i in range(5)}
+        assert _labels(G.connected_components_star(_pairs(spark, []))) == {}
 
     def test_duplicate_and_reversed_edges_are_harmless(self, spark):
         edges = [(1, 2), (2, 1), (1, 2), (2, 3), (3, 3)]
-        got = _labels(G.component_labels_star(_nodes(spark, 4), _pairs(spark, edges)))
-        assert got[1] == got[2] == got[3] == 1 and got[0] == 0
+        got = _labels(G.connected_components_star(_pairs(spark, edges)))
+        assert got == {1: 1, 2: 1, 3: 1}
 
     @pytest.mark.parametrize("seed", [7, 21, 99])
     def test_random_graph_matches_union_find(self, spark, seed):
-        rng = random.Random(seed)
         n = 60
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(45)]
-        edges = [e for e in edges if e[0] != e[1]]
-        want = _union_find(n, edges)
-        got = _labels(G.component_labels_star(_nodes(spark, n), _pairs(spark, edges)))
-        assert got == want
-
-    def test_agrees_with_propagation_on_shallow_graph(self, spark):
-        rng = random.Random(4)
-        n = 40
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(25)]
-        edges = [e for e in edges if e[0] != e[1]]
-        star = _labels(G.component_labels_star(_nodes(spark, n), _pairs(spark, edges)))
-        prop = _labels(D.component_labels(_nodes(spark, n), _pairs(spark, edges)))
-        assert star == prop
+        edges = _random_edges(seed, n, 45)
+        want = _touched(_union_find(n, edges), edges)
+        assert _labels(G.connected_components_star(_pairs(spark, edges))) == want
 
     def test_deep_chain_beyond_propagation_budget(self, spark):
-        # a 400-edge path: propagation moves the min ONE hop per round,
-        # so its default 20-round budget cannot label the far end - the
-        # star rounds contract doubly-logarithmically and can
+        # a 400-edge path: a labeler that moves the min one hop per round
+        # would need 400 rounds; the star rounds contract it in ~2·log₂
         n = 401
         chain = [(i, i + 1) for i in range(n - 1)]
-        got = _labels(G.component_labels_star(_nodes(spark, n), _pairs(spark, chain)))
-        assert set(got.values()) == {0}
-        prop = _labels(D.component_labels(_nodes(spark, n), _pairs(spark, chain),
-                                          max_rounds=20))
-        assert prop[n - 1] != 0  # the default budget provably isn't enough here
+        got = _labels(G.connected_components_star(_pairs(spark, chain)))
+        assert got == {i: 0 for i in range(n)}
 
-    def test_nonconvergence_raises(self, spark):
+    def test_nonconvergence_raises(self, spark, monkeypatch):
+        monkeypatch.setattr(G, "MAX_STAR_ROUNDS", 1)
         with pytest.raises(RuntimeError, match="did not converge"):
             G.connected_components_star(
-                _pairs(spark, [(i, i + 1) for i in range(64)]), max_rounds=1
+                _pairs(spark, [(i, i + 1) for i in range(64)])
             )
 
 
 class TestSurvivorsWiring:
-    def test_star_and_propagation_keep_identical_rows(self, spark):
-        rng = random.Random(11)
+    """survivors_from_pairs over the cap (MAX_DRIVER_PAIRS = 1), so the
+    star rounds run, against the default driver path and the oracle."""
+
+    def test_over_cap_keeps_driver_path_rows(self, spark, monkeypatch):
         n = 50
         df = _nodes(spark, n)
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(30)]
-        pairs = _pairs(spark, [e for e in edges if e[0] != e[1]])
-        a = {r.doc_id for r in D.survivors_from_pairs(df, pairs).collect()}
-        b = {r.doc_id for r in
-             D.survivors_from_pairs(df, pairs, labeler="star").collect()}
-        assert a == b
+        edges = _random_edges(11, n, 30)
+        want = {x for x, lab in _union_find(n, edges).items() if x == lab}
+        driver = {r.doc_id for r in
+                  D.survivors_from_pairs(df, _pairs(spark, edges)).collect()}
+        monkeypatch.setattr(D, "MAX_DRIVER_PAIRS", 1)
+        star = {r.doc_id for r in
+                D.survivors_from_pairs(df, _pairs(spark, edges)).collect()}
+        assert driver == star == want
 
-    def test_star_survivor_is_component_min(self, spark):
+    def test_star_survivor_is_component_min(self, spark, monkeypatch):
+        monkeypatch.setattr(D, "MAX_DRIVER_PAIRS", 1)
         df = _nodes(spark, 6)
         pairs = _pairs(spark, [(3, 5), (4, 3)])
-        kept = {r.doc_id for r in
-                D.survivors_from_pairs(df, pairs, labeler="star").collect()}
+        kept = {r.doc_id for r in D.survivors_from_pairs(df, pairs).collect()}
         assert kept == {0, 1, 2, 3}
 
 
 class TestComponentLabelsAuto:
-    """Round-15 optimization: the driver union-find fast path of
-    component_labels_auto must agree exactly with the distributed
-    propagation labeler (it replaced the loop inside
-    dedup_ngram_jaccard - 44 -> ~20 Spark jobs at sf0.1)."""
+    """component_labels picks its path automatically: the driver
+    union-find under MAX_DRIVER_PAIRS, the star rounds above it.  Both
+    paths must return the oracle's labels for exactly the pair nodes."""
 
     @pytest.mark.parametrize("seed", [3, 17, 42])
-    def test_agrees_with_propagation(self, spark, seed):
-        rng = random.Random(seed)
+    @pytest.mark.parametrize("cap", ["default", 1])
+    def test_matches_union_find(self, spark, monkeypatch, cap, seed):
+        if cap != "default":
+            monkeypatch.setattr(D, "MAX_DRIVER_PAIRS", cap)
         n = 50
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(35)]
-        edges = [e for e in edges if e[0] != e[1]]
-        nodes = _nodes(spark, n)
-        auto = {r.node: r.label for r in D.component_labels_auto(
-            nodes, _pairs(spark, edges)).collect()}
-        prop = {r.node: r.label for r in D.component_labels(
-            nodes, _pairs(spark, edges)).collect()}
-        assert auto == prop
+        edges = _random_edges(seed, n, 35)
+        want = _touched(_union_find(n, edges), edges)
+        assert _labels(D.component_labels(_pairs(spark, edges))) == want
 
     def test_isolated_nodes_label_themselves(self, spark):
-        got = {r.node: r.label for r in D.component_labels_auto(
-            _nodes(spark, 6), _pairs(spark, [(0, 1)])).collect()}
-        assert got == {0: 0, 1: 0, 2: 2, 3: 3, 4: 4, 5: 5}
+        # no row for a node outside the pairs: consumers anti-join the
+        # drops, so an isolate survives as its own component
+        assert _labels(D.component_labels(_pairs(spark, [(0, 1)]))) == {
+            0: 0, 1: 0}
+        kept = D.survivors_from_pairs(_nodes(spark, 6), _pairs(spark, [(0, 1)]))
+        assert {r.doc_id for r in kept.collect()} == {0, 2, 3, 4, 5}
 
     def test_over_cap_falls_back_to_distributed(self, spark, monkeypatch):
-        # cap of 1: two edges must route through component_labels
+        # cap of 1: two edges must route through the star rounds, which
+        # carry no broadcast hint (their table is unbounded)
         monkeypatch.setattr(D, "MAX_DRIVER_PAIRS", 1)
-        got = {r.node: r.label for r in D.component_labels_auto(
-            _nodes(spark, 4), _pairs(spark, [(0, 1), (1, 2)])).collect()}
-        assert got == {0: 0, 1: 0, 2: 0, 3: 3}
+        labels = D.component_labels(_pairs(spark, [(0, 1), (1, 2)]))
+        assert "ResolvedHint" not in labels._jdf.queryExecution().analyzed().toString()
+        assert _labels(labels) == {0: 0, 1: 0, 2: 0}
+
+    def test_driver_path_is_a_broadcast_literal(self, spark):
+        labels = D.component_labels(_pairs(spark, [(0, 1), (1, 2), (5, 5)]))
+        assert "ResolvedHint" in labels._jdf.queryExecution().analyzed().toString()
+        assert _labels(labels) == {0: 0, 1: 0, 2: 0}  # self-loop: no row
 
     def test_union_find_labels_matches_reference(self):
-        rng = random.Random(9)
         n = 80
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(60)]
-        edges = [e for e in edges if e[0] != e[1]]
+        edges = _random_edges(9, n, 60)
         want = _union_find(n, edges)
-        got = D.union_find_labels(edges)
-        touched = {u for e in edges for u in e}
-        assert got == {x: want[x] for x in touched}
+        assert D.union_find_labels(edges) == _touched(want, edges)

@@ -619,26 +619,51 @@ class TestPortableHash:
         assert all(0 <= v < 2**52 for v in sp.values())
 
 
+def _shuffled_chain(n=60, seed=1):
+    """One path through n nodes in shuffled id order, edges listed in
+    shuffled order.  With the defaults the component min sits 38 hops
+    from the path's far end (node 2 is 34 hops away), beyond a 20-round
+    one-hop-per-round labeler."""
+    import random
+
+    rng = random.Random(seed)
+    ids = list(range(n))
+    rng.shuffle(ids)
+    edges = [(ids[i], ids[i + 1]) for i in range(n - 1)]
+    rng.shuffle(edges)
+    return n, edges
+
+
 class TestSurvivorsFromPairs:
-    def test_components_resolve_to_min_id(self, spark):
+    @pytest.mark.parametrize("graph", ["two_components", "shuffled_chain"])
+    @pytest.mark.parametrize("cap", ["default", 1])
+    def test_components_resolve_to_min_id(self, spark, monkeypatch, cap,
+                                          graph):
         """A~B, B~C must collapse to one survivor (min id) even though
         the A~C pair was never reported - pair relations close over
-        connected components."""
+        connected components, on the driver path (default cap) and on
+        the distributed one (cap 1), at any component depth."""
         from kafka_cassandra_plugin_spark.operators.dedup import (
             survivors_from_pairs,
         )
 
+        if cap != "default":
+            monkeypatch.setattr(D, "MAX_DRIVER_PAIRS", cap)
+        if graph == "two_components":
+            # {1,2,3} -> 1, {5,6} -> 5, singletons 4 and 7 survive
+            ids, edges = range(1, 8), [(1, 2), (2, 3), (5, 6)]
+            want = [1, 4, 5, 7]
+        else:
+            n, edges = _shuffled_chain()
+            ids, want = range(n), [0]
         df = spark.createDataFrame(
-            [(i, f"d{i}") for i in range(1, 8)], "doc_id long, text string"
+            [(i, f"d{i}") for i in ids], "doc_id long, text string"
         )
-        pairs = spark.createDataFrame(
-            [(1, 2), (2, 3), (5, 6)], "id_a long, id_b long"
-        )
+        pairs = spark.createDataFrame(edges, "id_a long, id_b long")
         kept = sorted(
             r.doc_id for r in survivors_from_pairs(df, pairs).collect()
         )
-        # {1,2,3} -> 1, {5,6} -> 5, singletons 4 and 7 survive
-        assert kept == [1, 4, 5, 7]
+        assert kept == want
 
     def test_pipeline_end_to_end(self, spark, docs):
         """minhash pairs over a planted corpus -> survivors == originals

@@ -96,6 +96,20 @@ class TestFunnel:
         for c in ("quality", "lang", "n_tokens", "n_tokens_bpe", "fingerprint"):
             assert c in annotated.columns
 
+    def test_over_cap_survivors_give_same_reasons(self, batch, annotated,
+                                                   monkeypatch):
+        """Pair sets over dedup.MAX_DRIVER_PAIRS resolve through the
+        star rounds instead of the driver union-find; every row must
+        get the same verdict either way."""
+        from kafka_cassandra_plugin_spark.operators import dedup as D
+
+        monkeypatch.setattr(D, "MAX_DRIVER_PAIRS", 0)
+        got = {(r.doc_id, r.reject_reason)
+               for r in PL.curate_annotated(batch).collect()}
+        want = {(r.doc_id, r.reject_reason) for r in annotated.collect()}
+        assert "near_dup_batch" in {reason for _, reason in got}
+        assert got == want
+
     def test_wrong_lang_gate(self, batch):
         out = PL.curate_annotated(batch, langs=("__none__",))
         # with an impossible language allowlist, every quality-passing

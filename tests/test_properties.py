@@ -327,11 +327,13 @@ class TestStarComponentsProperties:
                 parent[max(ru, rv)] = min(ru, rv)
         want = {x: find(x) for x in range(n)}
 
-        nodes = spark.range(n).select(F.col("id").alias("doc_id"))
         pairs = spark.createDataFrame(
             [(int(a), int(b)) for a, b in edges] or [(0, 0)],
             "id_a: long, id_b: long",
         )
         got = {r.node: r.label
-               for r in G.component_labels_star(nodes, pairs).collect()}
-        assert got == want
+               for r in G.connected_components_star(pairs).collect()}
+        # exactly the nodes of non-self-loop edges get a row; every other
+        # node (isolate or self-loop only) labels itself
+        assert set(got) == {x for u, v in edges if u != v for x in (u, v)}
+        assert {x: got.get(x, x) for x in range(n)} == want
