@@ -932,12 +932,12 @@ def component_labels(pairs: DataFrame, id_a: str = "id_a",
 
     One capped collect picks the path.  A pair set of at most
     :data:`MAX_DRIVER_PAIRS` rows resolves on the DRIVER
-    (:func:`union_find_labels`) and comes back as a broadcast-hinted
-    literal frame: the cap bounds it at 2 x MAX_DRIVER_PAIRS rows, and
-    there are none of the distributed rounds' fixed jobs.  Above the cap
-    the labels come from :func:`.graph.connected_components_star` -
-    diameter-independent round count, no driver-side graph - with no
-    hint, since that table is unbounded.
+    (:func:`union_find_labels`) and comes back as a LocalRelation literal
+    that joins broadcast by its size: the cap bounds it at
+    2 x MAX_DRIVER_PAIRS rows, and there are none of the distributed
+    rounds' fixed jobs.  Above the cap the labels come from
+    :func:`.graph.connected_components_star` - diameter-independent
+    round count, no driver-side graph.
 
     ``pairs`` should be materialized (localCheckpoint) by the caller
     when its plan is expensive: the probe and the star rounds both
@@ -949,6 +949,7 @@ def component_labels(pairs: DataFrame, id_a: str = "id_a",
     pair table reported 74.2 GB) and wrongly demoted a small pair set
     to the distributed path.  No cheap trustworthy row bound exists for
     an RDD-backed frame; the probe stays."""
+    import pandas as pd
     from pyspark.sql.types import StructField, StructType
 
     head = pairs.select(id_a, id_b).limit(MAX_DRIVER_PAIRS + 1).collect()
@@ -956,14 +957,17 @@ def component_labels(pairs: DataFrame, id_a: str = "id_a",
         return connected_components_star(pairs, id_a, id_b)
     lab = union_find_labels(head)
     id_type = pairs.schema[id_a].dataType
+    # from pandas, Arrow makes the literal a LocalRelation with its real
+    # size, so joins broadcast it unhinted (a Python list plans as an
+    # unsized RDD scan and sort-merge joins)
     labels = pairs.sparkSession.createDataFrame(
-        sorted(lab.items()),
+        pd.DataFrame(sorted(lab.items()), columns=["node", "label"]),
         StructType([StructField("node", id_type),
                     StructField("label", id_type)]),
     )
-    # no edge: limit(0) plans as an empty LocalRelation, which the
-    # optimizer folds out of every join instead of broadcasting it
-    return F.broadcast(labels if lab else labels.limit(0))
+    # an empty pandas frame skips Arrow; limit(0) plans as an empty
+    # LocalRelation, which the optimizer folds out of every join
+    return labels if lab else labels.limit(0)
 
 
 def survivors_from_pairs(df: DataFrame, pairs: DataFrame,

@@ -16,6 +16,10 @@ Scale posture (100 TB target, tested on local[32]):
 - `spark.sql.legacy.parquet.nanosAsLong=true`: the events table carries
   nanosecond parquet timestamps which Spark 4 otherwise refuses to read;
   the catalog layer converts the raw long to timestamp_ntz explicitly.
+- Python workers fork from :mod:`.worker_daemon`, which stops every
+  Python UDF task from re-reading Spark's zip archives on Python < 3.12.
+  ``get_spark`` puts the package root first on the workers' PYTHONPATH
+  so the daemon imports whatever the working directory.
 """
 
 from __future__ import annotations
@@ -51,7 +55,12 @@ ENGINE_DEFAULTS: dict[str, str] = {
     "spark.ui.enabled": "false",
     "spark.ui.showConsoleProgress": "false",
     "spark.driver.memory": "8g",
+    "spark.python.daemon.module": "kafka_cassandra_plugin_spark.worker_daemon",
 }
+
+# directory holding the package: Python workers need it on their path to
+# start the daemon above
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 # Reference config contract (Config.scala:57-67 + plugin.properties):
@@ -154,6 +163,9 @@ def get_spark(
         conf.update(engine_confs_from_plugin(load_config(properties_file)))
     if overrides:
         conf.update(overrides)
+    pythonpath = "spark.executorEnv.PYTHONPATH"
+    conf[pythonpath] = os.pathsep.join(
+        p for p in (PACKAGE_ROOT, conf.get(pythonpath)) if p)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -164,8 +176,9 @@ def get_spark(
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable engine confs to an externally-created
     session (the driver passes us its own SparkSession in ``entry()``)."""
+    # the daemon module too: the caller's workers may not find the package
     static = {"spark.driver.memory", "spark.ui.enabled",
-              "spark.ui.showConsoleProgress"}
+              "spark.ui.showConsoleProgress", "spark.python.daemon.module"}
     for k, v in ENGINE_DEFAULTS.items():
         if k in static:
             continue

@@ -58,20 +58,11 @@ def spark():
     # master (e.g. `local-cluster[2,4,2048]`) to catch single-JVM
     # assumptions — localCheckpoint block locality, Hadoop-FS rename
     # visibility — that a local master cannot exercise (round-13 smoke,
-    # BASELINE.md).
+    # BASELINE.md).  Their Python workers find the package because
+    # get_spark puts its root on spark.executorEnv.PYTHONPATH.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "8"
     master = os.environ.get("KCP_TEST_MASTER", f"local[{cpus}]")
     overrides = {"spark.sql.shuffle.partitions": "8"}
-    if not master.startswith("local["):
-        # separate executor JVMs spawn their own Python workers, which
-        # do NOT inherit the driver's sys.path insert above — ship the
-        # repo root the way a real deployment ships the package
-        # (pip/--py-files); without this every pandas-UDF row fails
-        # with ModuleNotFoundError (round-13 local-cluster smoke)
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        existing = os.environ.get("PYTHONPATH", "")
-        overrides["spark.executorEnv.PYTHONPATH"] = (
-            f"{repo}:{existing}" if existing else repo)
     s = get_spark("kcp-tests", master=master, overrides=overrides)
     yield s
 

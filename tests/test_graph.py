@@ -154,9 +154,23 @@ class TestComponentLabelsAuto:
         assert _labels(labels) == {0: 0, 1: 0, 2: 0}
 
     def test_driver_path_is_a_broadcast_literal(self, spark):
+        # a sized LocalRelation, not an unsized RDD scan: the anti-join
+        # broadcasts it without a hint
         labels = D.component_labels(_pairs(spark, [(0, 1), (1, 2), (5, 5)]))
-        assert "ResolvedHint" in labels._jdf.queryExecution().analyzed().toString()
+        assert "LocalRelation" in labels._jdf.queryExecution().optimizedPlan().toString()
+        assert "ResolvedHint" not in labels._jdf.queryExecution().analyzed().toString()
         assert _labels(labels) == {0: 0, 1: 0, 2: 0}  # self-loop: no row
+        kept = D.survivors_from_pairs(_nodes(spark, 4), _pairs(spark, [(0, 1)]))
+        kept.collect()  # AQE shows its final plan once it has run
+        plan = kept._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+
+    def test_empty_driver_literal_folds_out_of_the_join(self, spark):
+        labels = D.component_labels(_pairs(spark, [(3, 3)]))
+        assert _labels(labels) == {}
+        kept = _nodes(spark, 4).join(
+            labels.select(F.col("node").alias("doc_id")), "doc_id", "left_anti")
+        assert "Join" not in kept._jdf.queryExecution().optimizedPlan().toString()
 
     def test_union_find_labels_matches_reference(self):
         n = 80
