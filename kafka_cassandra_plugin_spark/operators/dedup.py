@@ -932,12 +932,13 @@ def component_labels(pairs: DataFrame, id_a: str = "id_a",
 
     One capped collect picks the path.  A pair set of at most
     :data:`MAX_DRIVER_PAIRS` rows resolves on the DRIVER
-    (:func:`union_find_labels`) and comes back as a LocalRelation literal
-    that joins broadcast by its size: the cap bounds it at
-    2 x MAX_DRIVER_PAIRS rows, and there are none of the distributed
-    rounds' fixed jobs.  Above the cap the labels come from
+    (:func:`union_find_labels`) and comes back as a broadcast-hinted
+    LocalRelation literal: the cap bounds it at 2 x MAX_DRIVER_PAIRS
+    rows, and there are none of the distributed rounds' fixed jobs.
+    Above the cap the labels come from
     :func:`.graph.connected_components_star` - diameter-independent
-    round count, no driver-side graph.
+    round count, no driver-side graph - with no hint, since that table
+    is unbounded.
 
     ``pairs`` should be materialized (localCheckpoint) by the caller
     when its plan is expensive: the probe and the star rounds both
@@ -957,17 +958,17 @@ def component_labels(pairs: DataFrame, id_a: str = "id_a",
         return connected_components_star(pairs, id_a, id_b)
     lab = union_find_labels(head)
     id_type = pairs.schema[id_a].dataType
-    # from pandas, Arrow makes the literal a LocalRelation with its real
-    # size, so joins broadcast it unhinted (a Python list plans as an
-    # unsized RDD scan and sort-merge joins)
+    # from pandas, Arrow makes the literal a LocalRelation (a Python list
+    # plans as an RDD scan): its broadcast needs no collect job
     labels = pairs.sparkSession.createDataFrame(
         pd.DataFrame(sorted(lab.items()), columns=["node", "label"]),
         StructType([StructField("node", id_type),
                     StructField("label", id_type)]),
     )
-    # an empty pandas frame skips Arrow; limit(0) plans as an empty
+    # the hint holds if Arrow falls back to the RDD scan.  An empty
+    # pandas frame skips Arrow; limit(0) plans as an empty
     # LocalRelation, which the optimizer folds out of every join
-    return labels if lab else labels.limit(0)
+    return F.broadcast(labels) if lab else labels.limit(0)
 
 
 def survivors_from_pairs(df: DataFrame, pairs: DataFrame,

@@ -626,10 +626,10 @@ def curate_annotated(
 
     # stage 4: intra-batch near-dup clusters keep their min-id member.
     # component_labels picks the survivor path: micro-batch pair sets
-    # resolve on the driver, so the drop set is a LocalRelation LITERAL
-    # and both joins below broadcast it by size - no distributed rounds,
-    # no kept checkpoint.  Pair sets above its cap get the star labels
-    # and the same joins plan as AQE decides.
+    # resolve on the driver, so the drop set is a broadcast-hinted
+    # LocalRelation LITERAL and both joins below are broadcast - no
+    # distributed rounds, no kept checkpoint.  Pair sets above its cap
+    # get the star labels, unhinted, and the same joins plan as shuffles.
     pairs = minhash_lsh_dedup_pairs(
         surv, text_col, id_col, threshold=near_dup_threshold,
         exploded=exploded_surv, **mh_params

@@ -355,7 +355,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
         corpus, "text", "doc_id", n=3, threshold=0.7, max_shingle_freq=20
     ).localCheckpoint()  # pairs feed both the output and the closure
     # every id_a is in a pair, so the pair-node labels cover the join;
-    # under MAX_DRIVER_PAIRS they are a LocalRelation literal and the join
+    # under MAX_DRIVER_PAIRS they are a broadcast literal and the join
     # below never shuffles the pairs
     labels = D.component_labels(pairs)
     return (

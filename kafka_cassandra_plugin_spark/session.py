@@ -16,10 +16,14 @@ Scale posture (100 TB target, tested on local[32]):
 - `spark.sql.legacy.parquet.nanosAsLong=true`: the events table carries
   nanosecond parquet timestamps which Spark 4 otherwise refuses to read;
   the catalog layer converts the raw long to timestamp_ntz explicitly.
-- Python workers fork from :mod:`.worker_daemon`, which stops every
-  Python UDF task from re-reading Spark's zip archives on Python < 3.12.
-  ``get_spark`` puts the package root first on the workers' PYTHONPATH
-  so the daemon imports whatever the working directory.
+- On ``local``/``local-cluster`` masters Python workers fork from
+  :mod:`.worker_daemon`, which stops every Python UDF task from
+  re-reading Spark's zip archives on Python < 3.12.  ``get_spark`` puts
+  the package root first on the workers' PYTHONPATH so the daemon
+  imports whatever the working directory.  Other masters keep
+  ``pyspark.daemon``: there the package reaches executors by pip or
+  ``--py-files``, and a ``--py-files`` archive joins ``sys.path`` only
+  inside each task, after the daemon has started.
 """
 
 from __future__ import annotations
@@ -59,8 +63,16 @@ ENGINE_DEFAULTS: dict[str, str] = {
 }
 
 # directory holding the package: Python workers need it on their path to
-# start the daemon above
+# start the daemon above, so the daemon is kept only where they can reach
+# it - masters whose executors run on this host
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DAEMON_MODULE = "spark.python.daemon.module"
+
+
+def _local_master(master: str) -> bool:
+    """``local``, ``local[n]`` and ``local-cluster[...]``: executors on
+    this host, where :data:`PACKAGE_ROOT` exists."""
+    return master.startswith("local")
 
 
 # Reference config contract (Config.scala:57-67 + plugin.properties):
@@ -156,21 +168,40 @@ def get_spark(
     (Config.scala:26-52): engine defaults < ``properties_file``
     (plugin.* keys mapped to spark.kcp.* confs) < explicit ``overrides``.
     """
-    builder = SparkSession.builder.appName(app_name)
-    builder = builder.master(master or default_master())
+    master = master or default_master()
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for k, v in session_confs(master, overrides, properties_file).items():
+        builder = builder.config(k, v)
+    spark = builder.getOrCreate()
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    if _local_master(sc.master):
+        # every Python UDF carries sc.environment to its workers; by now
+        # it holds spark.executorEnv.PYTHONPATH from every source
+        # (spark-defaults.conf, --conf, overrides), which stays after the
+        # package root
+        paths = [p for p in sc.environment.get("PYTHONPATH", "").split(
+            os.pathsep) if p]
+        if PACKAGE_ROOT not in paths:
+            sc.environment["PYTHONPATH"] = os.pathsep.join(
+                [PACKAGE_ROOT] + paths)
+    return spark
+
+
+def session_confs(master: str, overrides: dict[str, str] | None = None,
+                  properties_file: str | None = None) -> dict[str, str]:
+    """The confs :func:`get_spark` sets on its builder for ``master``:
+    engine defaults < ``properties_file`` < ``overrides``, without the
+    worker daemon on a non-local master (where the package may not be
+    importable when the daemon starts) unless ``overrides`` sets it."""
     conf = dict(ENGINE_DEFAULTS)
+    if not _local_master(master):
+        del conf[DAEMON_MODULE]
     if properties_file:
         conf.update(engine_confs_from_plugin(load_config(properties_file)))
     if overrides:
         conf.update(overrides)
-    pythonpath = "spark.executorEnv.PYTHONPATH"
-    conf[pythonpath] = os.pathsep.join(
-        p for p in (PACKAGE_ROOT, conf.get(pythonpath)) if p)
-    for k, v in conf.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
+    return conf
 
 
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
@@ -178,7 +209,7 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     session (the driver passes us its own SparkSession in ``entry()``)."""
     # the daemon module too: the caller's workers may not find the package
     static = {"spark.driver.memory", "spark.ui.enabled",
-              "spark.ui.showConsoleProgress", "spark.python.daemon.module"}
+              "spark.ui.showConsoleProgress", DAEMON_MODULE}
     for k, v in ENGINE_DEFAULTS.items():
         if k in static:
             continue

@@ -59,7 +59,7 @@ def spark():
     # assumptions — localCheckpoint block locality, Hadoop-FS rename
     # visibility — that a local master cannot exercise (round-13 smoke,
     # BASELINE.md).  Their Python workers find the package because
-    # get_spark puts its root on spark.executorEnv.PYTHONPATH.
+    # get_spark puts its root first on the workers' PYTHONPATH.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip() or "8"
     master = os.environ.get("KCP_TEST_MASTER", f"local[{cpus}]")
     overrides = {"spark.sql.shuffle.partitions": "8"}

@@ -154,11 +154,10 @@ class TestComponentLabelsAuto:
         assert _labels(labels) == {0: 0, 1: 0, 2: 0}
 
     def test_driver_path_is_a_broadcast_literal(self, spark):
-        # a sized LocalRelation, not an unsized RDD scan: the anti-join
-        # broadcasts it without a hint
+        # a hinted LocalRelation, not an RDD scan: the anti-join
+        # broadcasts it with no collect job
         labels = D.component_labels(_pairs(spark, [(0, 1), (1, 2), (5, 5)]))
         assert "LocalRelation" in labels._jdf.queryExecution().optimizedPlan().toString()
-        assert "ResolvedHint" not in labels._jdf.queryExecution().analyzed().toString()
         assert _labels(labels) == {0: 0, 1: 0, 2: 0}  # self-loop: no row
         kept = D.survivors_from_pairs(_nodes(spark, 4), _pairs(spark, [(0, 1)]))
         kept.collect()  # AQE shows its final plan once it has run

@@ -22,6 +22,7 @@ import pytest
 from pyspark.sql.functions import pandas_udf
 
 from kafka_cassandra_plugin_spark import worker_daemon as WD
+from kafka_cassandra_plugin_spark.session import DAEMON_MODULE, session_confs
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 GATED = sys.version_info < (3, 12)
@@ -146,10 +147,32 @@ def test_session_workers_run_the_gate(spark):
     assert got == "gated_invalidate_caches@worker_daemon.py"
 
 
+@pytest.mark.parametrize("master,local", [
+    ("local", True), ("local[*]", True), ("local-cluster[2,1,1024]", True),
+    ("spark://head:7077", False), ("k8s://https://head:443", False),
+    ("yarn", False)])
+def test_engine_daemon_only_on_local_masters(master, local):
+    # elsewhere executors get the package by pip or --py-files, and a
+    # --py-files archive is not on the path when the daemon starts
+    assert session_confs(master).get(DAEMON_MODULE) == (
+        WD.__name__ if local else None)
+    chosen = {DAEMON_MODULE: WD.__name__}  # e.g. package pip-installed
+    assert session_confs(master, chosen)[DAEMON_MODULE] == WD.__name__
+
+
 def test_workers_start_outside_the_repo(tmp_path):
     """A session started from an unrelated working directory with no
     PYTHONPATH still finds the daemon: get_spark ships the package root
-    on the workers' PYTHONPATH."""
+    on the workers' PYTHONPATH, ahead of a deployment's own
+    spark.executorEnv.PYTHONPATH (here from spark-defaults.conf), which
+    the workers keep."""
+    deployed = tmp_path / "deployed"
+    deployed.mkdir()
+    (deployed / "kcp_deployed.py").write_text("VALUE = 10\n")
+    conf_dir = tmp_path / "conf"
+    conf_dir.mkdir()
+    (conf_dir / "spark-defaults.conf").write_text(
+        f"spark.executorEnv.PYTHONPATH {deployed}\n")
     script = textwrap.dedent(f"""
         import sys
         sys.path.insert(0, {REPO!r})
@@ -162,14 +185,16 @@ def test_workers_start_outside_the_repo(tmp_path):
 
         @pandas_udf("long")
         def plus_one(s: pd.Series) -> pd.Series:
-            return s + 1
+            import kcp_deployed
+            return s + kcp_deployed.VALUE
 
         rows = spark.range(3).select(plus_one("id")).collect()
         print("RESULT", sorted(r[0] for r in rows))
         spark.stop()
     """)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_CONF_DIR"] = str(conf_dir)
     out = subprocess.run([sys.executable, "-c", script], cwd=str(tmp_path),
                          env=env, capture_output=True, text=True,
                          timeout=600)
-    assert "RESULT [1, 2, 3]" in out.stdout, out.stderr[-3000:]
+    assert "RESULT [10, 11, 12]" in out.stdout, out.stderr[-3000:]
