@@ -24,6 +24,15 @@ Scale posture (100 TB target, tested on local[32]):
   ``pyspark.daemon``: there the package reaches executors by pip or
   ``--py-files``, and a ``--py-files`` archive joins ``sys.path`` only
   inside each task, after the daemon has started.
+- On the same masters streaming checkpoints (offset and commit logs,
+  state-store delta and checksum files) are written through Hadoop's
+  FileSystem API (``FileSystemBasedCheckpointFileManager``) rather than
+  FileContext: without libhadoop, ``FileContext.rename`` on the local
+  file system launches a ``readlink`` process per call, dozens per
+  trigger.  On local disk both managers check that the destination is
+  absent and then ``rename(2)``, and both write and verify the ``.crc``
+  checksums.  Other masters keep the deployment's choice (e.g. an
+  object-store checkpoint manager from ``spark-defaults.conf``).
 """
 
 from __future__ import annotations
@@ -60,6 +69,9 @@ ENGINE_DEFAULTS: dict[str, str] = {
     "spark.ui.showConsoleProgress": "false",
     "spark.driver.memory": "8g",
     "spark.python.daemon.module": "kafka_cassandra_plugin_spark.worker_daemon",
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
 }
 
 # directory holding the package: Python workers need it on their path to
@@ -67,6 +79,11 @@ ENGINE_DEFAULTS: dict[str, str] = {
 # it - masters whose executors run on this host
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DAEMON_MODULE = "spark.python.daemon.module"
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+# engine defaults only a local/local-cluster master gets: elsewhere the
+# package may not be importable when the daemon starts, and the
+# deployment picks the checkpoint manager for its own file system
+LOCAL_ONLY = (DAEMON_MODULE, CHECKPOINT_MANAGER)
 
 
 def _local_master(master: str) -> bool:
@@ -192,11 +209,11 @@ def session_confs(master: str, overrides: dict[str, str] | None = None,
                   properties_file: str | None = None) -> dict[str, str]:
     """The confs :func:`get_spark` sets on its builder for ``master``:
     engine defaults < ``properties_file`` < ``overrides``, without the
-    worker daemon on a non-local master (where the package may not be
-    importable when the daemon starts) unless ``overrides`` sets it."""
-    conf = dict(ENGINE_DEFAULTS)
-    if not _local_master(master):
-        del conf[DAEMON_MODULE]
+    :data:`LOCAL_ONLY` defaults on a non-local master unless ``overrides``
+    sets them."""
+    local = _local_master(master)
+    conf = {k: v for k, v in ENGINE_DEFAULTS.items()
+            if local or k not in LOCAL_ONLY}
     if properties_file:
         conf.update(engine_confs_from_plugin(load_config(properties_file)))
     if overrides:
@@ -205,12 +222,13 @@ def session_confs(master: str, overrides: dict[str, str] | None = None,
 
 
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-settable engine confs to an externally-created
-    session (the driver passes us its own SparkSession in ``entry()``)."""
+    """Apply the runtime-settable engine confs :func:`session_confs`
+    gives the session's master to an externally-created session
+    (``__spark_entry__.entry()`` receives the caller's own SparkSession)."""
     # the daemon module too: the caller's workers may not find the package
     static = {"spark.driver.memory", "spark.ui.enabled",
               "spark.ui.showConsoleProgress", DAEMON_MODULE}
-    for k, v in ENGINE_DEFAULTS.items():
+    for k, v in session_confs(spark.sparkContext.master).items():
         if k in static:
             continue
         try:

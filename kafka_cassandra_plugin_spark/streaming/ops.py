@@ -14,6 +14,8 @@ beyond the watermark is dropped - the reference's own contract is weaker:
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import uuid
 from typing import Sequence
 
@@ -44,17 +46,29 @@ def replay_stream(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
 def run_to_memory(stream_df: DataFrame, name: str | None = None,
                   output_mode: str = "append", timeout: int = 120) -> DataFrame:
     """Drain a bounded stream into an in-memory table (availableNow) and
-    return the result as a batch DataFrame."""
+    return the result as a batch DataFrame.
+
+    Each call checkpoints to a fresh temporary directory, removed once the
+    query has ended, so a reused ``name`` starts from the first offset.
+    A query still running after ``timeout`` seconds is stopped and
+    ``TimeoutError`` raised: its table would hold a partial result."""
     name = name or f"mem_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", f"/tmp/kcp_ckpt_{name}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(timeout)
+    ckpt = tempfile.mkdtemp(prefix="kcp_mem_ckpt_")
+    try:
+        q = (
+            stream_df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(timeout):
+            q.stop()
+            raise TimeoutError(
+                f"stream {name!r} did not drain within {timeout} s")
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return stream_df.sparkSession.table(name)
 
 

@@ -161,6 +161,43 @@ class TestConfigLoading:
         assert props["a"] == "b=c"
         assert props["url"] == "jdbc:x:y"
 
+    @pytest.mark.parametrize("master,local", [
+        ("local", True), ("local[*]", True),
+        ("local-cluster[2,1,1024]", True), ("spark://head:7077", False),
+        ("yarn", False)])
+    def test_checkpoint_manager_only_on_local_masters(self, master, local):
+        """Local masters write checkpoints through the FileSystem API; a
+        cluster keeps its deployment's manager unless overrides set one."""
+        from kafka_cassandra_plugin_spark import session as S
+
+        key = S.CHECKPOINT_MANAGER
+        assert S.session_confs(master).get(key) == (
+            S.ENGINE_DEFAULTS[key] if local else None)
+        chosen = {key: "com.example.ObjectStoreCheckpointFileManager"}
+        assert S.session_confs(master, chosen)[key] == chosen[key]
+
+    def test_ensure_engine_confs_keeps_local_only_confs_local(self):
+        """An externally created session gets the runtime confs of its
+        own master: no local-only default on a cluster session."""
+        from types import SimpleNamespace
+
+        from kafka_cassandra_plugin_spark import session as S
+
+        def applied(master):
+            conf = {}
+            S.ensure_engine_confs(SimpleNamespace(
+                sparkContext=SimpleNamespace(master=master),
+                conf=SimpleNamespace(set=conf.__setitem__)))
+            return conf
+
+        cluster = applied("spark://head:7077")
+        assert S.CHECKPOINT_MANAGER not in cluster
+        assert cluster["spark.sql.session.timeZone"] == "UTC"
+        assert applied("local[2]")[S.CHECKPOINT_MANAGER] == \
+            S.ENGINE_DEFAULTS[S.CHECKPOINT_MANAGER]
+        assert not {S.DAEMON_MODULE, "spark.driver.memory"} & (
+            applied("local[2]").keys() | cluster.keys())
+
     def test_session_turns_off_console_progress(self, spark):
         """Engine sessions print no ``[Stage N: ...]`` bars on stderr."""
         assert spark.sparkContext.getConf().get(

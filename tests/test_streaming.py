@@ -12,6 +12,9 @@ infrastructure.
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+import re
 import shutil
 import tempfile
 
@@ -152,6 +155,117 @@ class TestListenerFanout:
         hub2(small, batch_id=1)
         assert got[-1] == 5
         assert not hub2.truncated
+
+    def test_watcher_restart_resumes_state(self, spark, tmp_path):
+        """A restarted watch query reloads last-seen values from the
+        state-store delta files: after the restart each new change is
+        delivered once, with the pre-restart value as ``old_value``, and
+        nothing from before the restart is delivered again."""
+        src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+        schema = "key string, value string, poll_ts timestamp_ntz"
+        t0 = dt.datetime(2024, 1, 1)
+
+        def publish(rows):
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+                "append").parquet(src)
+
+        def drain():
+            hub, got = ST.ListenerHub(), []
+            hub.add_listener(lambda pdf: got.extend(
+                pdf[["key", "old_value", "new_value"]].itertuples(
+                    index=False, name=None)))
+            stream = spark.readStream.schema(schema).parquet(src)
+            q = (
+                ST.watch_value_changes(stream).writeStream.foreachBatch(hub)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            assert q.awaitTermination(120)
+            return sorted(got, key=lambda r: (r[0], str(r[1])))
+
+        publish([(f"k{i}", "a", t0) for i in range(4)])
+        publish([("k0", "b", t0 + dt.timedelta(seconds=1)),
+                 ("k1", "b", t0 + dt.timedelta(seconds=1)),
+                 ("k2", "a", t0 + dt.timedelta(seconds=1))])
+        assert drain() == [("k0", None, "a"), ("k0", "a", "b"),
+                           ("k1", None, "a"), ("k1", "a", "b"),
+                           ("k2", None, "a"), ("k3", None, "a")]
+
+        t1 = t0 + dt.timedelta(seconds=2)
+        publish([("k0", "c", t1), ("k2", "a", t1), ("k3", "d", t1),
+                 ("k9", "z", t1)])
+        assert drain() == [("k0", "b", "c"), ("k3", "a", "d"),
+                           ("k9", None, "z")]
+
+        names = {f for _, _, files in os.walk(f"{ckpt}/state")
+                 for f in files}
+        assert any(re.fullmatch(r"\.\d+\.delta\.crc", f) for f in names)
+        assert any(re.fullmatch(r"\d+\.delta\.crc", f) for f in names)
+
+
+class TestLocalCheckpointFiles:
+    def test_local_master_renames_through_filesystem_api(self, spark, tmp_path):
+        """A local session writes checkpoints with the FileSystem-based
+        manager (no ``readlink`` launch per rename), which still refuses
+        to replace an existing file when overwrite is off: the check
+        ``HDFSMetadataLog.add`` relies on to refuse a second write of the
+        same batch."""
+        from py4j.protocol import Py4JJavaError
+
+        jvm = spark._jvm
+        hconf = spark._jsparkSession.sessionState().newHadoopConf()
+        mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+            .CheckpointFileManager.create(
+                jvm.org.apache.hadoop.fs.Path(str(tmp_path)), hconf)
+        assert mgr.getClass().getSimpleName() == \
+            "FileSystemBasedCheckpointFileManager"
+
+        batch = jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+        out = mgr.createAtomic(batch, False)
+        out.write(1)
+        out.close()
+        again = mgr.createAtomic(batch, False)
+        again.write(2)
+        with pytest.raises(Py4JJavaError) as err:
+            again.close()
+        # Spark's SparkFileAlreadyExistsException, a subclass
+        assert jvm.java.lang.Class.forName(
+            "org.apache.hadoop.fs.FileAlreadyExistsException").isInstance(
+                err.value.java_exception)
+        assert (tmp_path / "0").read_bytes() == b"\x01"
+        assert (tmp_path / ".0.crc").exists()
+
+
+class TestRunToMemory:
+    def test_reused_name_drains_from_the_start(self, spark, tmp_path):
+        stream = ST.replay_stream(spark, spark.range(10), str(tmp_path / "src"))
+        for _ in range(2):
+            assert ST.run_to_memory(stream, name="reused_name").count() == 10
+
+    def test_timeout_stops_the_query_and_raises(self, spark, tmp_path,
+                                                 monkeypatch):
+        made, mkdtemp = [], tempfile.mkdtemp
+
+        def recording_mkdtemp(*args, **kwargs):
+            made.append(mkdtemp(*args, **kwargs))
+            return made[-1]
+
+        monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+
+        @F.udf("long")
+        def slow(x):
+            import time
+
+            time.sleep(30)
+            return x
+
+        stream = ST.replay_stream(spark, spark.range(1), str(tmp_path / "src"))
+        with pytest.raises(TimeoutError):
+            ST.run_to_memory(stream.select(slow("id").alias("id")),
+                             name="too_slow", timeout=1)
+        assert not [q for q in spark.streams.active if q.name == "too_slow"]
+        assert made and not os.path.exists(made[0])
 
 
 class TestCheckpointedSink:
