@@ -11,10 +11,11 @@ Each row runs once through the noop sink (full plan execution, no
 driver collect, no disk write) inside its own Spark job group.  The run
 keeps Spark's event log in a temporary directory and at the end writes
 one record per row to ``bench_metrics.json``: wall, jobs, tasks, failed
-tasks, task CPU, GC, shuffle and spill.  Jobs and tasks do not move
-with host load and task CPU moves far less than wall, so a slow wall
-with unchanged counts reads as a busy host, and changed counts read as
-a changed plan.
+tasks, generated classes compiled, task CPU, GC, shuffle and spill.
+Jobs, tasks and compiles do not move with host load and task CPU moves
+far less than wall, so a slow wall with unchanged counts reads as a
+busy host, and changed counts read as a changed plan (or, for compiles,
+a generated-code cache too small for the sweep).
 
 ``python3 perfbench/run.py`` is the benchmark of record; this is the
 full 50-row sweep.
@@ -33,7 +34,10 @@ ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
 
 from kafka_cassandra_plugin_spark.queries import load_all  # noqa: E402
-from kafka_cassandra_plugin_spark.session import get_spark  # noqa: E402
+from kafka_cassandra_plugin_spark.session import (  # noqa: E402
+    codegen_compiles,
+    get_spark,
+)
 from perfbench.trace import TaskTotals, group_jobs, parse_event_log  # noqa: E402
 
 
@@ -69,10 +73,13 @@ def session(app: str, **overrides: str):
 def measure_row(spark, name: str, run) -> dict:
     """Run one row under Spark job group ``name`` and return its wall
     seconds with the group's jobs, tasks and failed tasks (status
-    tracker, read right after the row).  A group's counts add up over
-    calls, so give every measured run its own name."""
+    tracker, read right after the row) and the classes the JVM compiled
+    while it ran (``compiles``; a warm row that still compiles misses
+    the generated-code cache).  A group's counts add up over calls, so
+    give every measured run its own name."""
     sc = spark.sparkContext
     release_session_state()
+    compiled = codegen_compiles(spark)
     sc.setJobGroup(name, name)
     t0 = time.perf_counter()
     try:
@@ -83,7 +90,8 @@ def measure_row(spark, name: str, run) -> dict:
         sc.setLocalProperty("spark.job.description", None)
     jobs, tasks, failed = group_jobs(sc, name)
     return {"wall_s": round(wall, 3), "jobs": jobs, "tasks": tasks,
-            "failed_tasks": failed}
+            "failed_tasks": failed,
+            "compiles": codegen_compiles(spark) - compiled}
 
 
 def write_row_metrics(path: str, rows: dict[str, dict], log_dir: str,

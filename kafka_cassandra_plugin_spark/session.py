@@ -33,6 +33,12 @@ Scale posture (100 TB target, tested on local[32]):
   absent and then ``rename(2)``, and both write and verify the ``.crc``
   checksums.  Other masters keep the deployment's choice (e.g. an
   object-store checkpoint manager from ``spark-defaults.conf``).
+- ``spark.sql.codegen.cache.maxEntries=1000`` on every master: Spark's
+  default LRU of 100 generated classes is smaller than one warm batch
+  pass (~275 classes) or one CurationSink micro-batch, so every pass
+  recompiled all of its classes with Janino.  The conf is static (read
+  when the JVM's first session starts), so :func:`ensure_engine_confs`
+  cannot apply it to a session built elsewhere.
 """
 
 from __future__ import annotations
@@ -72,6 +78,13 @@ ENGINE_DEFAULTS: dict[str, str] = {
     "spark.sql.streaming.checkpointFileManagerClass":
         "org.apache.spark.sql.execution.streaming.checkpointing."
         "FileSystemBasedCheckpointFileManager",
+    # Generated-class cache (LRU, one per JVM, static: builder only).
+    # One perfbench batch pass compiles 260-285 classes and one
+    # full-gate CurationSink micro-batch 210-320, so Spark's default of
+    # 100 evicted every class before its next use and each warm pass
+    # recompiled ~275 of them with Janino.  1000 holds both working sets
+    # with room for a session that runs the two side by side.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 # directory holding the package: Python workers need it on their path to
@@ -80,6 +93,7 @@ ENGINE_DEFAULTS: dict[str, str] = {
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DAEMON_MODULE = "spark.python.daemon.module"
 CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
 # engine defaults only a local/local-cluster master gets: elsewhere the
 # package may not be importable when the daemon starts, and the
 # deployment picks the checkpoint manager for its own file system
@@ -224,15 +238,27 @@ def session_confs(master: str, overrides: dict[str, str] | None = None,
 def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable engine confs :func:`session_confs`
     gives the session's master to an externally-created session
-    (``__spark_entry__.entry()`` receives the caller's own SparkSession)."""
-    # the daemon module too: the caller's workers may not find the package
-    static = {"spark.driver.memory", "spark.ui.enabled",
-              "spark.ui.showConsoleProgress", DAEMON_MODULE}
+    (``__spark_entry__.entry()`` receives the caller's own SparkSession).
+
+    Spark decides what is settable: ``isModifiable`` is false for the
+    driver, UI and daemon keys and for static SQL confs such as the
+    codegen cache size, which such a session keeps as its builder set
+    them.  Any error from a settable key propagates."""
+    conf = spark.conf
     for k, v in session_confs(spark.sparkContext.master).items():
-        if k in static:
-            continue
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on a live session - keep going
+        # isModifiable answers only for the confs Spark registers; it
+        # registers none for the checkpoint manager, which it reads from
+        # the session's Hadoop conf, filled from every session conf
+        if conf.isModifiable(k) or k == CHECKPOINT_MANAGER:
+            conf.set(k, v)
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes the session's JVM has compiled with Janino so
+    far: one per miss of the generated-code cache, counted by Spark's
+    ``CodegenMetrics`` (on a local master this includes every task's)."""
+    metrics = getattr(getattr(
+        spark._jvm.org.apache.spark.metrics.source, "CodegenMetrics$"),
+        "MODULE$")
+    return metrics.METRIC_COMPILATION_TIME().getCount()

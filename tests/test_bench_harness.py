@@ -39,6 +39,17 @@ class TestMeasureRow:
         spark.range(10).collect()
         assert set(tracker.getJobIdsForGroup("bench-test:b")) == jb
 
+    def test_compiles_counted_per_row(self, spark):
+        """A row's first run compiles its generated classes; the same
+        plan again finds them in the cache."""
+        df = spark.range(0, 5, 1, 1).selectExpr("id * 104729 AS x")
+        first = bench.measure_row(spark, "bench-test:compile-1",
+                                  lambda: bench.materialize(df))
+        again = bench.measure_row(spark, "bench-test:compile-2",
+                                  lambda: bench.materialize(df))
+        assert first["compiles"] >= 1
+        assert again["compiles"] == 0
+
     def test_group_cleared_when_the_row_raises(self, spark):
         def boom():
             raise RuntimeError("row failed")
@@ -83,7 +94,7 @@ class TestRowMetrics:
         (tmp_path / "local-1").write_text(
             "\n".join(json.dumps(e) for e in events) + "\n")
         rows = {name: {"wall_s": 1.0, "jobs": 1, "tasks": 1,
-                       "failed_tasks": 0}
+                       "failed_tasks": 0, "compiles": 3}
                 for name in ("q_a", "q_b", "q_none")}
         out_path = tmp_path / "bench_metrics.json"
         bench.write_row_metrics(str(out_path), rows, str(tmp_path),
@@ -91,7 +102,8 @@ class TestRowMetrics:
         out = json.loads(out_path.read_text())
         assert set(out) == {"q_a", "q_b", "q_none"}
         assert out["q_a"] == {"wall_s": 1.0, "jobs": 1, "tasks": 1,
-                              "failed_tasks": 0, "task_cpu_s": 3.0,
+                              "failed_tasks": 0, "compiles": 3,
+                              "task_cpu_s": 3.0,
                               "gc_s": 0.1, "shuffle_mb": 2.0,
                               "spill_mb": 2.0}
         assert out["q_b"]["task_cpu_s"] == 0.5

@@ -176,9 +176,10 @@ class TestConfigLoading:
         chosen = {key: "com.example.ObjectStoreCheckpointFileManager"}
         assert S.session_confs(master, chosen)[key] == chosen[key]
 
-    def test_ensure_engine_confs_keeps_local_only_confs_local(self):
+    def test_ensure_engine_confs_keeps_local_only_confs_local(self, spark):
         """An externally created session gets the runtime confs of its
-        own master: no local-only default on a cluster session."""
+        own master: no local-only default on a cluster session, and no
+        key Spark's own ``isModifiable`` refuses."""
         from types import SimpleNamespace
 
         from kafka_cassandra_plugin_spark import session as S
@@ -187,7 +188,8 @@ class TestConfigLoading:
             conf = {}
             S.ensure_engine_confs(SimpleNamespace(
                 sparkContext=SimpleNamespace(master=master),
-                conf=SimpleNamespace(set=conf.__setitem__)))
+                conf=SimpleNamespace(set=conf.__setitem__,
+                                     isModifiable=spark.conf.isModifiable)))
             return conf
 
         cluster = applied("spark://head:7077")
@@ -195,8 +197,53 @@ class TestConfigLoading:
         assert cluster["spark.sql.session.timeZone"] == "UTC"
         assert applied("local[2]")[S.CHECKPOINT_MANAGER] == \
             S.ENGINE_DEFAULTS[S.CHECKPOINT_MANAGER]
-        assert not {S.DAEMON_MODULE, "spark.driver.memory"} & (
+        assert not {S.DAEMON_MODULE, "spark.driver.memory",
+                    S.CODEGEN_CACHE} & (
             applied("local[2]").keys() | cluster.keys())
+
+    def test_ensure_engine_confs_raises_what_it_cannot_set(self):
+        """Only keys Spark calls unmodifiable are skipped: a failure to
+        set any other key reaches the caller."""
+        from types import SimpleNamespace
+
+        from kafka_cassandra_plugin_spark import session as S
+
+        def refuse(k, v):
+            raise RuntimeError(f"cannot set {k}")
+
+        with pytest.raises(RuntimeError, match="cannot set"):
+            S.ensure_engine_confs(SimpleNamespace(
+                sparkContext=SimpleNamespace(master="local[2]"),
+                conf=SimpleNamespace(set=refuse,
+                                     isModifiable=lambda k: True)))
+
+    @pytest.mark.parametrize("master", [
+        "local[2]", "local-cluster[2,1,1024]", "spark://head:7077", "yarn"])
+    def test_codegen_cache_on_every_master(self, master):
+        """Every JVM keeps its own generated-code cache, so every master
+        gets the size; ``overrides`` still wins."""
+        from kafka_cassandra_plugin_spark import session as S
+
+        assert S.session_confs(master)[S.CODEGEN_CACHE] == "1000"
+        assert S.session_confs(master, {S.CODEGEN_CACHE: "64"})[
+            S.CODEGEN_CACHE] == "64"
+
+    def test_codegen_cache_holds_a_repeated_working_set(self, spark):
+        """150 distinct tiny plans (each inlines its own literal, so each
+        generates its own classes) run twice: the second round compiles
+        nothing.  At Spark's default of 100 entries the first round has
+        evicted every class before the second needs it."""
+        from kafka_cassandra_plugin_spark.session import codegen_compiles
+
+        def run_round():
+            before = codegen_compiles(spark)
+            for i in range(150):
+                spark.range(0, 3, 1, 1).selectExpr(f"id * {i} AS x").write \
+                    .format("noop").mode("overwrite").save()
+            return codegen_compiles(spark) - before
+
+        assert run_round() > 100
+        assert run_round() == 0
 
     def test_session_turns_off_console_progress(self, spark):
         """Engine sessions print no ``[Stage N: ...]`` bars on stderr."""
