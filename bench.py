@@ -10,8 +10,9 @@ line:
 Each row runs once through the noop sink (full plan execution, no
 driver collect, no disk write) inside its own Spark job group.  The run
 keeps Spark's event log in a temporary directory and at the end writes
-one record per row to ``bench_metrics.json``: wall, jobs, tasks, failed
-tasks, generated classes compiled, task CPU, GC, shuffle and spill.
+one record per row to ``bench_metrics.json``: wall, jobs (split into
+the build's and the final write's), tasks, failed tasks, generated
+classes compiled, task CPU, GC, shuffle and spill.
 Jobs, tasks and compiles do not move with host load and task CPU moves
 far less than wall, so a slow wall with unchanged counts reads as a
 busy host, and changed counts read as a changed plan (or, for compiles,
@@ -32,6 +33,8 @@ import time
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
+
+from pyspark.sql import DataFrame  # noqa: E402
 
 from kafka_cassandra_plugin_spark.queries import load_all  # noqa: E402
 from kafka_cassandra_plugin_spark.session import (  # noqa: E402
@@ -70,36 +73,61 @@ def session(app: str, **overrides: str):
     return get_spark(app, master=f"local[{n}]", overrides=conf)
 
 
-def measure_row(spark, name: str, run) -> dict:
-    """Run one row under Spark job group ``name`` and return its wall
-    seconds with the group's jobs, tasks and failed tasks (status
-    tracker, read right after the row) and the classes the JVM compiled
-    while it ran (``compiles``; a warm row that still compiles misses
-    the generated-code cache).  A group's counts add up over calls, so
-    give every measured run its own name."""
+def exec_group(name: str) -> str:
+    """The job group of a row's final write."""
+    return name + "#exec"
+
+
+def fit_only(factory, *args) -> None:
+    """A row of a factory's eager work alone (a ``FIT_ROWS`` fit, an
+    index build): the plan it returns is not executed."""
+    factory(*args)
+
+
+def measure_row(spark, name: str, build) -> dict:
+    """Run one row and return its wall seconds (build and write) with
+    its jobs, tasks and failed tasks (status tracker, read right after
+    the row) and the classes the JVM compiled while it ran
+    (``compiles``; a warm row that still compiles misses the
+    generated-code cache).
+
+    ``build()`` runs under Spark job group ``name``.  When it returns a
+    DataFrame, the row's final write (the noop sink) runs under
+    :func:`exec_group`; ``build_jobs`` and ``exec_jobs`` count the two
+    apart (eager checkpoints and probe collects against the final plan).
+    A row that returns anything else (None from a fit or a row that
+    writes for itself) counts every job as build.  A group's counts add
+    up over calls, so give every measured run its own name."""
     sc = spark.sparkContext
     release_session_state()
     compiled = codegen_compiles(spark)
-    sc.setJobGroup(name, name)
     t0 = time.perf_counter()
     try:
-        run()
+        sc.setJobGroup(name, name)
+        df = build()
+        if isinstance(df, DataFrame):
+            sc.setJobGroup(exec_group(name), exec_group(name))
+            materialize(df)
     finally:
         wall = time.perf_counter() - t0
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs, tasks, failed = group_jobs(sc, name)
-    return {"wall_s": round(wall, 3), "jobs": jobs, "tasks": tasks,
-            "failed_tasks": failed,
+    build_jobs, build_tasks, build_failed = group_jobs(sc, name)
+    exec_jobs, exec_tasks, exec_failed = group_jobs(sc, exec_group(name))
+    return {"wall_s": round(wall, 3), "jobs": build_jobs + exec_jobs,
+            "build_jobs": build_jobs, "exec_jobs": exec_jobs,
+            "tasks": build_tasks + exec_tasks,
+            "failed_tasks": build_failed + exec_failed,
             "compiles": codegen_compiles(spark) - compiled}
 
 
 def write_row_metrics(path: str, rows: dict[str, dict], log_dir: str,
                       app_id: str) -> None:
     """Complete each ``measure_row`` record (keyed by its job group) with
-    the task CPU, GC, shuffle and spill of the group's jobs in the
-    application's event log, and write them to ``path`` as JSON."""
+    the task CPU, GC, shuffle and spill of the jobs of its two groups in
+    the application's event log, and write them to ``path`` as JSON."""
     totals = {name: TaskTotals() for name in rows}
+    totals.update({exec_group(name): totals[name] for name in rows})
     for _, group, _, t in parse_event_log(log_dir, app_id):
         if group in totals:
             totals[group].add(t)
@@ -209,8 +237,7 @@ def main() -> None:
         rows[group] = measure_row(spark, group, run)
         return rows[group]["wall_s"]
 
-    times = {name: measure(name, lambda: materialize(
-                 registry[name].build(spark, sf_dir)))
+    times = {name: measure(name, lambda: registry[name].build(spark, sf_dir))
              for name in sorted(registry)}
 
     # Non-declared side-by-side rows: the xxhash64 at-scale dedup variants
@@ -219,10 +246,10 @@ def main() -> None:
     # whose one-off fits run first as their own FIT_ROWS rows.  NOT
     # counted in `value`, which sums the declared set only.
     depth = _depth_ops(sf_dir)
-    extra = {row: measure(row, lambda: depth[op](spark))
+    extra = {row: measure(row, lambda: fit_only(depth[op], spark))
              for op, row in FIT_ROWS}
     extra_fns = {**_xxhash64_variants(sf_dir), **depth}
-    extra.update({name: measure(name, lambda: materialize(fn(spark)))
+    extra.update({name: measure(name, lambda: fn(spark))
                   for name, fn in extra_fns.items()})
 
     # `value` goes LAST, so a reader that keeps only the tail of stdout
@@ -477,11 +504,10 @@ def _sf1_smoke(spark, sf1_dir: str, registry, measure,
     # the IVF architecture, so the query rows below show PROBE cost (the
     # recurring term), not fit cost
     run_row("sim_ivf_ann[index_build]",
-            lambda: registry["sim_ivf_ann"].build(spark, sf1_dir))
+            lambda: fit_only(registry["sim_ivf_ann"].build, spark, sf1_dir))
 
     for name in SF1_SMOKE:
-        run_row(name, lambda: materialize(registry[name].build(spark,
-                                                               sf1_dir)))
+        run_row(name, lambda: registry[name].build(spark, sf1_dir))
 
     # The declared brute-force build is quadratic BY CONSTRUCTION (its
     # query set is 10% of the corpus, so work = Q x N grows 100x at a
@@ -491,13 +517,13 @@ def _sf1_smoke(spark, sf1_dir: str, registry, measure,
     e = Catalog(spark, sf1_dir).embeddings
     q200 = e.filter(F.col("vec_id") % 100 == 0)
     run_row("sim_topk_bruteforce[q200]",
-            lambda: materialize(S.brute_force_topk(e, q200, k=10)))
+            lambda: S.brute_force_topk(e, q200, k=10))
 
     depth = _depth_ops(sf1_dir)
     for op, row in FIT_ROWS:
-        run_row(row, lambda: depth[op](spark))
+        run_row(row, lambda: fit_only(depth[op], spark))
     for name, fn in depth.items():
-        run_row(name, lambda: materialize(fn(spark)))
+        run_row(name, lambda: fn(spark))
     return times, skipped
 
 

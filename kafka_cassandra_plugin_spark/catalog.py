@@ -21,6 +21,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
+
+from .sources import read_parquet
 
 TPCH_TABLES = (
     "region",
@@ -65,8 +68,9 @@ class Catalog:
 
     def table(self, name: str) -> DataFrame:
         if name not in self._cache:
-            df = self.spark.read.parquet(self.path(name))
-            if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            df, schema = read_parquet(self.spark, self.path(name))
+            if name == "events" and "ts" in schema.names and isinstance(
+                    schema["ts"].dataType, LongType):
                 df = df.withColumn(
                     "ts",
                     F.expr("timestamp_micros(ts div 1000)").cast("timestamp_ntz"),

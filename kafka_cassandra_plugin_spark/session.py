@@ -39,6 +39,18 @@ Scale posture (100 TB target, tested on local[32]):
   recompiled all of its classes with Janino.  The conf is static (read
   when the JVM's first session starts), so :func:`ensure_engine_confs`
   cannot apply it to a session built elsewhere.
+- ``spark.sql.codegen.useIdInClassName=false`` on every master: the
+  whole-stage stage number then stays out of generated class names, and
+  so out of the codegen cache key, and a plan whose stage numbers shift
+  between runs (a CurationSink micro-batch) reuses its classes.
+- ``spark.python.sql.dataFrameDebugging.enabled=false`` on every master:
+  no Python call site is captured on each ``F.col`` / ``F.lit`` /
+  ``Column`` call (about half of a warm batch pass's py4j round trips).
+  Errors keep their class and message but lose pyspark's "DataFrame
+  context" block; ``get_spark(overrides={...: "true"})`` brings it back.
+  The conf is static, so :func:`ensure_engine_confs` cannot turn the
+  capture off on a session built elsewhere; pyspark also reads it only
+  once per process, at the first Column call with an active session.
 """
 
 from __future__ import annotations
@@ -46,6 +58,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+CODEGEN_IDS = "spark.sql.codegen.useIdInClassName"
+DATAFRAME_DEBUGGING = "spark.python.sql.dataFrameDebugging.enabled"
 
 ENGINE_DEFAULTS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
@@ -85,6 +100,21 @@ ENGINE_DEFAULTS: dict[str, str] = {
     # recompiled ~275 of them with Janino.  1000 holds both working sets
     # with room for a session that runs the two side by side.
     "spark.sql.codegen.cache.maxEntries": "1000",
+    # The whole-stage stage number is part of a generated class's name,
+    # so of its cache key: a stage whose number shifts between runs of
+    # one plan (a CurationSink micro-batch after its first) missed the
+    # cache and recompiled every class.  Runtime conf.
+    CODEGEN_IDS: "false",
+    # pyspark wraps F.col, F.lit and every Column method to record the
+    # Python call site for error messages: each call looks up the active
+    # session, reads a conf, walks the stack and sets and clears a JVM
+    # origin.  F.col("x") costs 13 py4j round trips instead of 3, and
+    # ``col + 1`` or ``.alias()`` 11 instead of 1; the query builds of a
+    # warm perfbench batch pass made ~20k round trips with it and ~10k
+    # without.  Errors keep their class and message but lose the
+    # "DataFrame context" block (the Python file:line that built the
+    # failing Column).  Static SQL conf: builder only.
+    DATAFRAME_DEBUGGING: "false",
 }
 
 # directory holding the package: Python workers need it on their path to
@@ -243,7 +273,9 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
     Spark decides what is settable: ``isModifiable`` is false for the
     driver, UI and daemon keys and for static SQL confs such as the
     codegen cache size, which such a session keeps as its builder set
-    them.  Any error from a settable key propagates."""
+    them (among them :data:`DATAFRAME_DEBUGGING`, so pyspark keeps
+    capturing call sites there).  Any error from a settable key
+    propagates."""
     conf = spark.conf
     for k, v in session_confs(spark.sparkContext.master).items():
         # isModifiable answers only for the confs Spark registers; it

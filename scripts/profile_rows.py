@@ -2,10 +2,10 @@
 """Per-row optimization profiler (round 15, guide §1).
 
 For each named declared query: run through the noop sink (steady state,
-best-of-3), record wall seconds, the number of Spark jobs the build+run
-issued (counted in its bench.measure_row job group), and the
-POST-EXECUTION adaptive plan (isFinalPlan=true, showing AQE stage reuse
-/ skew splits that the static explain cannot).
+best-of-3), record wall seconds, the number of Spark jobs the build and
+the final write issued (counted in their bench.measure_row job groups),
+and the POST-EXECUTION adaptive plan (isFinalPlan=true, showing AQE
+stage reuse / skew splits that the static explain cannot).
 
 Usage: [PROFILE_SUFFIX=runtime_before] python scripts/profile_rows.py out.json q1 q2 ...
 """
@@ -35,7 +35,7 @@ def main() -> None:
         best = min(
             (bench.measure_row(
                 spark, f"profile:{name}:{i}",
-                lambda: bench.materialize(registry[name].build(spark, sf_dir)))
+                lambda: registry[name].build(spark, sf_dir))
              for i in range(3)),
             key=lambda rec: rec["wall_s"])
         # post-execution adaptive plan: execute the query's OWN
@@ -48,7 +48,9 @@ def main() -> None:
             plan = df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted")
         except Exception as ex:
             plan = f"runtime plan capture failed: {ex}"
-        results[name] = {"sec": best["wall_s"], "jobs": best["jobs"]}
+        results[name] = {"sec": best["wall_s"], "jobs": best["jobs"],
+                         "build_jobs": best["build_jobs"],
+                         "exec_jobs": best["exec_jobs"]}
         rp = os.path.join(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
             "plans", os.environ.get("KCP_PLANS_ROUND", "r16"),
@@ -56,7 +58,8 @@ def main() -> None:
         )
         with open(rp, "w") as f:
             f.write(plan)
-        print(f"{name}: {best['wall_s']:.3f}s  jobs={best['jobs']}",
+        print(f"{name}: {best['wall_s']:.3f}s  jobs={best['build_jobs']}"
+              f"+{best['exec_jobs']}",
               flush=True)
 
     with open(out_path, "w") as f:

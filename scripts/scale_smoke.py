@@ -99,9 +99,9 @@ def main() -> None:
     depth_fns = bench._depth_ops(sf_dir)
     # the one-off fits run first as their own rows (bench.FIT_ROWS), so
     # each depth row below measures only its recurring cost
-    runs = {row: (lambda op=op: depth_fns[op](spark))
+    runs = {row: (lambda op=op: bench.fit_only(depth_fns[op], spark))
             for op, row in bench.FIT_ROWS if op in rows}
-    runs.update({name: (lambda name=name: bench.materialize(
+    runs.update({name: (lambda name=name: (
         registry[name].build(spark, sf_dir) if name in registry
         else depth_fns[name](spark))) for name in rows})
     start = time.perf_counter()

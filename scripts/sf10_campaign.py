@@ -164,8 +164,8 @@ def main() -> None:
     start = time.perf_counter()
 
     def declared(sf_dir):
-        return {n: (lambda q=registry[n]: bench.materialize(
-            q.build(spark, sf_dir))) for n in names}
+        return {n: (lambda q=registry[n]: q.build(spark, sf_dir))
+                for n in names}
 
     sf1_times, sf1_skipped = run_rows(
         spark, declared(args.sf1), names, args.budget, start, "sf1")
@@ -192,9 +192,8 @@ def main() -> None:
         fits = [(op, row) for op, row in bench.FIT_ROWS if op in xnames]
 
         def extras(ops):
-            runs = {n: (lambda fn=fn: bench.materialize(fn(spark)))
-                    for n, fn in ops.items()}
-            runs.update({row: (lambda op=op: ops[op](spark))
+            runs = {n: (lambda fn=fn: fn(spark)) for n, fn in ops.items()}
+            runs.update({row: (lambda op=op: bench.fit_only(ops[op], spark))
                          for op, row in fits})
             return runs
 

@@ -39,6 +39,33 @@ class TestMeasureRow:
         spark.range(10).collect()
         assert set(tracker.getJobIdsForGroup("bench-test:b")) == jb
 
+    def test_build_and_final_write_counted_apart(self, spark):
+        """A row that returns its DataFrame: the jobs its build runs
+        (here one eager collect) stay in the row's group, and the noop
+        write of the returned plan runs under the row's exec group."""
+        tracker = spark.sparkContext.statusTracker()
+
+        def build():
+            spark.range(10).collect()
+            return spark.range(1000).selectExpr("id % 7 AS k") \
+                .groupBy("k").count()
+
+        rec = bench.measure_row(spark, "bench-test:split", build)
+        built = tracker.getJobIdsForGroup("bench-test:split")
+        wrote = tracker.getJobIdsForGroup(
+            bench.exec_group("bench-test:split"))
+        assert rec["build_jobs"] == len(built) == 1
+        assert rec["exec_jobs"] == len(wrote) >= 1
+        assert rec["jobs"] == rec["build_jobs"] + rec["exec_jobs"]
+
+    def test_row_without_a_plan_is_all_build(self, spark):
+        rec = bench.measure_row(spark, "bench-test:fit",
+                                lambda: bench.fit_only(spark.range, 5))
+        assert rec["build_jobs"] == rec["jobs"] == 0
+        rec = bench.measure_row(spark, "bench-test:writes",
+                                lambda: spark.range(10).collect())
+        assert rec["exec_jobs"] == 0 and rec["build_jobs"] == rec["jobs"] >= 1
+
     def test_compiles_counted_per_row(self, spark):
         """A row's first run compiles its generated classes; the same
         plan again finds them in the cache."""
@@ -90,6 +117,8 @@ class TestRowMetrics:
             _job(2, "q_b", 2), _task(2, 5e8, 50, 0, 0),
             _job(3, "q_a", 3), _task(3, 1e9, 0, 0, 0),
             _job(4, "other", 4), _task(4, 7e9, 0, 0, 0),
+            # q_b's final write, in its own group
+            _job(5, bench.exec_group("q_b"), 5), _task(5, 5e8, 0, 0, 0),
         ]
         (tmp_path / "local-1").write_text(
             "\n".join(json.dumps(e) for e in events) + "\n")
@@ -106,7 +135,7 @@ class TestRowMetrics:
                               "task_cpu_s": 3.0,
                               "gc_s": 0.1, "shuffle_mb": 2.0,
                               "spill_mb": 2.0}
-        assert out["q_b"]["task_cpu_s"] == 0.5
+        assert out["q_b"]["task_cpu_s"] == 1.0
         assert out["q_b"]["gc_s"] == 0.05
         # a row whose jobs are missing from the log reads zero, not absent
         assert out["q_none"]["task_cpu_s"] == 0.0

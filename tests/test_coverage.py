@@ -195,10 +195,11 @@ class TestConfigLoading:
         cluster = applied("spark://head:7077")
         assert S.CHECKPOINT_MANAGER not in cluster
         assert cluster["spark.sql.session.timeZone"] == "UTC"
+        assert cluster[S.CODEGEN_IDS] == "false"
         assert applied("local[2]")[S.CHECKPOINT_MANAGER] == \
             S.ENGINE_DEFAULTS[S.CHECKPOINT_MANAGER]
         assert not {S.DAEMON_MODULE, "spark.driver.memory",
-                    S.CODEGEN_CACHE} & (
+                    S.CODEGEN_CACHE, S.DATAFRAME_DEBUGGING} & (
             applied("local[2]").keys() | cluster.keys())
 
     def test_ensure_engine_confs_raises_what_it_cannot_set(self):
@@ -227,6 +228,62 @@ class TestConfigLoading:
         assert S.session_confs(master)[S.CODEGEN_CACHE] == "1000"
         assert S.session_confs(master, {S.CODEGEN_CACHE: "64"})[
             S.CODEGEN_CACHE] == "64"
+        assert S.session_confs(master)[S.CODEGEN_IDS] == "false"
+
+    @pytest.mark.parametrize("master", [
+        "local[2]", "local-cluster[2,1,1024]", "spark://head:7077", "yarn"])
+    def test_dataframe_debugging_off_on_every_master(self, master):
+        """No master captures a Python call site per Column call by
+        default; ``overrides`` turns the capture back on."""
+        from kafka_cassandra_plugin_spark import session as S
+
+        key = S.DATAFRAME_DEBUGGING
+        assert S.session_confs(master)[key] == "false"
+        assert S.session_confs(master, {key: "true"})[key] == "true"
+
+    def test_column_calls_cost_one_round_trip(self, spark):
+        """With the call-site capture off, building ``col + 1`` or
+        ``.alias()`` is one py4j call each (11 each with it on)."""
+        import py4j.clientserver as cs
+        from pyspark.sql import functions as F
+
+        col = F.col("x")
+        calls = []
+        send = cs.ClientServerConnection.send_command
+
+        def counted(conn, command, *args, **kwargs):
+            calls.append(command)
+            return send(conn, command, *args, **kwargs)
+
+        cs.ClientServerConnection.send_command = counted
+        try:
+            col + 1
+            plus = len(calls)
+            col.alias("y")
+            alias = len(calls) - plus
+        finally:
+            cs.ClientServerConnection.send_command = send
+        assert (plus, alias) == (1, 1)
+
+    def test_shifted_stage_numbers_reuse_generated_classes(self, spark):
+        """Two aggregates unioned in one order, then in the other: each
+        keeps its code but swaps whole-stage numbers, and the second plan
+        compiles nothing.  With the stage number in the class name every
+        one of its classes missed the cache."""
+        from kafka_cassandra_plugin_spark.session import codegen_compiles
+
+        def agg(m):
+            return spark.range(0, 50, 1, 2).selectExpr(
+                f"id % {m} AS k", f"id * {m} AS v").groupBy("k").sum("v")
+
+        def compiles(df):
+            before = codegen_compiles(spark)
+            df.write.format("noop").mode("overwrite").save()
+            return codegen_compiles(spark) - before
+
+        a, b = agg(7919), agg(7927)
+        assert compiles(a.unionByName(b)) >= 1
+        assert compiles(b.unionByName(a)) == 0
 
     def test_codegen_cache_holds_a_repeated_working_set(self, spark):
         """150 distinct tiny plans (each inlines its own literal, so each
@@ -321,6 +378,103 @@ class TestCompaction:
             sources.compact_parquet(spark, src, src)
         with pytest.raises(ValueError, match="out_path"):
             sources.compact_parquet(spark, src, src + "/")
+
+
+class TestParquetRead:
+    """``sources.read_parquet``: one schema-inference job per unchanged
+    table, and every read still returns what an inferring read would."""
+
+    @staticmethod
+    def jobs(spark, group, read):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            read()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_unchanged_table_infers_once(self, spark, tmp_path):
+        from kafka_cassandra_plugin_spark import sources
+
+        path = str(tmp_path / "t")
+        spark.range(20).selectExpr("id", "id * 2 AS v").write.parquet(path)
+        first = self.jobs(spark, "read-parquet:first",
+                          lambda: sources.read_parquet(spark, path))
+        again = self.jobs(spark, "read-parquet:again",
+                          lambda: sources.read_parquet(spark, path))
+        assert first >= 1 and again == 0
+        df, schema = sources.read_parquet(spark, path)
+        assert df.schema == schema
+        assert sorted(df.collect()) == sorted(spark.read.parquet(path).collect())
+
+    def test_rewrite_with_new_schema_is_seen(self, spark, tmp_path):
+        from kafka_cassandra_plugin_spark import sources
+
+        path = str(tmp_path / "t")
+        spark.range(5).selectExpr("id", "'a' AS s").write.parquet(path)
+        assert sources.read_parquet(spark, path)[1].names == ["id", "s"]
+        spark.range(5).selectExpr("id", "id * 0.5 AS d").write.mode(
+            "overwrite").parquet(path)
+        df, schema = sources.read_parquet(spark, path)
+        assert schema.names == ["id", "d"]
+        assert sorted(r.d for r in df.collect()) == [0, .5, 1, 1.5, 2]
+
+    def test_nanos_conf_decides_events_ts(self, spark, tmp_path):
+        """``events.ts`` is parquet TIMESTAMP(NANOS): Spark reads it as a
+        bigint only under ``nanosAsLong`` and refuses it otherwise, so a
+        schema resolved under one setting must not serve the other."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.errors import AnalysisException
+
+        from kafka_cassandra_plugin_spark import sources
+
+        path = str(tmp_path / "events.parquet")
+        pq.write_table(pa.table({"event_id": [1, 2], "ts": pa.array(
+            [1_700_000_000_123_456_789] * 2, pa.timestamp("ns"))}), path)
+        key = "spark.sql.legacy.parquet.nanosAsLong"
+        was = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "true")
+            for _ in range(2):
+                df, schema = sources.read_parquet(spark, path)
+                assert schema["ts"].dataType.simpleString() == "bigint"
+            assert df.first().ts == 1_700_000_000_123_456_789
+            spark.conf.set(key, "false")
+            with pytest.raises(AnalysisException, match="NANOS"):
+                sources.read_parquet(spark, path)
+        finally:
+            spark.conf.set(key, was)
+
+    def test_partitioned_matches_an_inferring_read(self, spark, tmp_path):
+        from kafka_cassandra_plugin_spark import sources
+
+        path = str(tmp_path / "t")
+        spark.range(30).selectExpr("id % 3 AS p", "id", "'x' || id AS s") \
+            .write.partitionBy("p").parquet(path)
+        want = spark.read.parquet(path)
+        rows = sorted(want.collect())
+        for _ in range(2):  # the inferring first read, then the cached one
+            df, schema = sources.read_parquet(spark, path)
+            assert schema == df.schema == want.schema
+            assert df.columns == ["id", "s", "p"]
+            assert sorted(df.collect()) == rows
+
+    def test_glob_path_is_inferred_every_read(self, spark, tmp_path):
+        """A glob is resolved by Spark, not ``os.stat``: even a path that
+        names an existing directory literally (``t[ab]``) reads what the
+        pattern matches (``ta``), so no stamp of it can be trusted."""
+        import shutil
+
+        from kafka_cassandra_plugin_spark import sources
+
+        spark.range(4).write.parquet(str(tmp_path / "ta"))
+        shutil.copytree(tmp_path / "ta", tmp_path / "t[ab]")
+        glob = str(tmp_path / "t[ab]")
+        for i in range(2):
+            assert self.jobs(spark, f"read-parquet:glob{i}",
+                             lambda: sources.read_parquet(spark, glob)) >= 1
 
 
 class TestRound9FacadeBindings:
